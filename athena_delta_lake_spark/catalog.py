@@ -155,9 +155,7 @@ class DeltaPond:
             # pay a classic file-list replay just to check for a stats
             # property (and a 10^6+-file table is no broadcast candidate
             # anyway)
-            from .delta.writer import _header_state
-
-            snap = _header_state(dt.path)
+            snap = dt.log.header()
             cfg = snap.metadata.get("configuration") or {}
             if "pond.stats.sizeInBytes" not in cfg:
                 return df

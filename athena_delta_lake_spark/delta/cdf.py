@@ -53,11 +53,12 @@ from .log import (
     addfile_from_action,
 )
 from .reader import read_files
+from .types import logical_to_physical, physical_to_logical
 
 
 class _HeaderTracker:
     """Schema/protocol/metadata header advanced INCREMENTALLY across a
-    commit range — the `_header_state` idea (writer.py) applied to a
+    commit range — the DeltaLog.header idea applied to a
     version WALK: one base header, then each commit's own metaData /
     protocol actions, so per-version schema lookups never replay a
     snapshot. `apply` funnels through log._apply_action so the
@@ -109,15 +110,15 @@ class _HeaderTracker:
 
     def p2l(self) -> dict[str, str] | None:
         """physical -> logical column-name map (None when unmapped)."""
-        config = (self.metadata or {}).get("configuration") or {}
-        if config.get("delta.columnMapping.mode", "none") == "none":
-            return None
-        return {
-            (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            ): f.name
-            for f in self.schema.fields
-        }
+        return physical_to_logical(
+            self.schema, (self.metadata or {}).get("configuration")
+        )
+
+    def l2p(self) -> dict[str, str] | None:
+        """logical -> physical column-name map (None when unmapped)."""
+        return logical_to_physical(
+            self.schema, (self.metadata or {}).get("configuration")
+        )
 
     def require_schema(self, v: int) -> T.StructType:
         if self.schema is None:
@@ -236,15 +237,17 @@ class _RangeTracker:
         watched: set[str],
         spark: SparkSession | None,
     ) -> None:
-        if spark is None:
-            spark = SparkSession.getActiveSession()
-        # gate on the TABLE-level threshold, not engaged(base_v): a range
+        # gate on the TABLE-level plane, not the plane at base_v: a range
         # starting before the newest checkpoint still routes light —
         # snapshot_light picks any older checkpoint at/below base_v (or
         # replays the JSON tail header-only when none exists, exactly the
         # work classic replay would have paid driver-side anyway)
-        if spark is not None and log.light_planning_engaged():
-            snap_l = log.snapshot_light(base_v)
+        light = log.light_plane(spark=spark)
+        if light is not None:
+            spark = spark or SparkSession.active()
+            snap_l = (
+                light if light.version == base_v else log.snapshot_light(base_v)
+            )
             self.header = _HeaderTracker.from_snapshot(snap_l)
             if watched:
                 w = spark.createDataFrame(
@@ -256,8 +259,7 @@ class _RangeTracker:
                 # survivor count is bounded by |watched| (the semi join),
                 # which already sits in driver memory — no cap needed
                 adds = snap_l.collect_pruned_add_files(spark, full_df=fdf)
-                p2l = self.header.p2l()
-                l2p = {v: k for k, v in p2l.items()} if p2l else None
+                l2p = self.header.l2p()
                 # collect_pruned_add_files hands back LOGICAL-keyed
                 # entries (base era); canonicalize to the log's physical
                 # form the per-commit adds arrive in
@@ -265,8 +267,7 @@ class _RangeTracker:
             return
         snap = log.snapshot(base_v)  # sub-threshold: cached, one replay
         self.header = _HeaderTracker.from_snapshot(snap)
-        p2l = self.header.p2l()
-        l2p = {v: k for k, v in p2l.items()} if p2l else None
+        l2p = self.header.l2p()
         self.state = {
             f.path: _rekey_entry(f, l2p)
             for f in snap.files
@@ -567,28 +568,18 @@ def _read_cdc_files(
 
     schema = snap.schema
     part_cols = snap.partition_columns
-    config = snap.metadata.get("configuration") or {}
-    mapped = config.get("delta.columnMapping.mode", "none") != "none"
+    l2p = logical_to_physical(schema, snap.metadata.get("configuration"))
     data_fields = [f for f in schema.fields if f.name not in part_cols]
-    if mapped:
+    if l2p:
         from .reader import _physical_rename
 
         read_fields = [
             T.StructField(
-                (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                ),
-                _physical_rename(f.dataType),
-                f.nullable,
+                l2p[f.name], _physical_rename(f.dataType), f.nullable
             )
             for f in data_fields
         ]
-        p2l_part = {
-            (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            ): f.name
-            for f in schema.fields
-        }
+        p2l_part = {p: n for n, p in l2p.items()}
     else:
         read_fields = list(data_fields)
         p2l_part = {f.name: f.name for f in schema.fields}
@@ -613,7 +604,7 @@ def _read_cdc_files(
     pieces = []
     for pvals, paths in by_part.items():
         piece = spark.read.schema(read_schema).parquet(*paths)
-        if mapped:
+        if l2p:
             cols = [
                 F.col(pf.name).cast(lf.dataType).alias(lf.name)
                 for pf, lf in zip(read_fields, data_fields)

@@ -36,12 +36,8 @@ from .fs import get_fs, normalize_table_path
 from .log import AddFile, DeltaLog, SnapshotState
 from .reader import read_files
 from .stats import Predicate, prune_files_auto
-from .writer import (
-    commit_rewrite,
-    file_fingerprint,
-    logical_to_physical,
-    stage_data_files,
-)
+from .types import logical_to_physical
+from .writer import commit_rewrite, file_fingerprint, stage_data_files
 
 
 # --------------------------------------------------------------- predicates
@@ -137,10 +133,9 @@ def _light_planning_candidates(spark, table_path: str, preds):
 
     if not preds:
         return None
-    log = DeltaLog(table_path)
-    if not log.light_planning_engaged(None):
+    light = DeltaLog(table_path).light_plane(spark=spark)
+    if light is None:
         return None
-    light = log.snapshot_light()
     types = {f.name: f.dataType for f in light.schema.fields}
     for col, op, _val in preds:
         dt = types.get(col)
@@ -191,10 +186,9 @@ def _light_compact_candidates(
     delta-spark OPTIMIZE batching idiom."""
     from .log import light_collect_cap
 
-    log = DeltaLog(table_path)
-    if not log.light_planning_engaged(None):
+    light = DeltaLog(table_path).light_plane(spark=spark)
+    if light is None:
         return None
-    light = log.snapshot_light()
     if zorder_by is None:
         # liquid-clustering policy lives in the header's domain metadata —
         # resolvable without any file materialization (compact re-clusters
@@ -1678,7 +1672,7 @@ def merge_upsert(
     # past the light-planning threshold: header-only replay now (schema/
     # identity/CDF planning never touches files); the candidate files
     # resolve through the light plane once the source is materialized
-    light = log.snapshot_light() if log.light_planning_engaged(None) else None
+    light = log.light_plane(spark=spark)
     snap = light.to_snapshot_state([]) if light is not None else log.snapshot()
     ident, ident_missing = _merge_identity_plan(
         snap, source, keys, when_not_matched
@@ -2288,7 +2282,7 @@ def merge_upsert_mor(
     log = DeltaLog(table_path)
     # light planning, exactly as in merge_upsert: header-only replay for
     # schema planning, candidates through the light plane post-materialize
-    light = log.snapshot_light() if log.light_planning_engaged(None) else None
+    light = log.light_plane(spark=spark)
     snap = light.to_snapshot_state([]) if light is not None else log.snapshot()
     ident, ident_missing = _merge_identity_plan(
         snap, source, keys, when_not_matched
@@ -2929,15 +2923,12 @@ def _light_restore_plan(log, version):
 
     from .log import light_collect_cap
 
-    if not log.light_planning_engaged(None):
+    lt = log.light_plane(version)
+    if lt is None:
         return None
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return None
-    if not log.light_planning_engaged(version):
-        return None
-    lt = log.snapshot_light(version)
+    # the plane engaged at the target implies it is engaged at the tip
     lc = log.snapshot_light()
+    spark = SparkSession.active()
     cap = light_collect_cap()
     tdf = lt.files_df(spark, full=True)
     cur_fp = lc.files_df(spark, full=True).select(
@@ -3223,27 +3214,24 @@ def vacuum(
     "planning": "classic"|"light"}. Metadata-only: walks the storage
     listing against the live-file set; never reads data.
 
-    Past the light-planning threshold (and given a SparkSession — passed
-    or active), the live-set/listing anti-join and the deletes run
-    EXECUTOR-side (_vacuum_light): the driver streams the expired listing
+    When DeltaLog.light_plane picks the driver-light plane (past the
+    light-planning threshold, with `spark` or an active session), the
+    live-set/listing anti-join and the deletes run EXECUTOR-side
+    (_vacuum_light): the driver streams the expired listing
     to a local spool and never holds the 10^7-path live set the classic
     path builds (measured 8.6 GiB RSS at 10^7 adds)."""
     from .deletion_vectors import dv_absolute_path
     from .fs import get_fs, normalize_table_path, strip_file_scheme
 
     table_path = normalize_table_path(table_path)
-    if DeltaLog(table_path).light_planning_engaged():
-        if spark is None:
-            try:
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-            except Exception:
-                spark = None
-        if spark is not None:
-            return _vacuum_light(spark, table_path, retention_hours, dry_run)
+    log = DeltaLog(table_path)
+    light = log.light_plane(spark=spark)
+    if light is not None:
+        return _vacuum_light(
+            spark or SparkSession.active(), light, retention_hours, dry_run
+        )
     fs = get_fs(table_path)
-    snap = DeltaLog(table_path).snapshot()
+    snap = log.snapshot()
     if retention_hours is None:
         retention_hours = retention_hours_from_interval(
             (snap.metadata.get("configuration") or {}).get(
@@ -3340,7 +3328,7 @@ def vacuum(
 
 
 def _vacuum_light(
-    spark, table_path: str, retention_hours: float | None, dry_run: bool
+    spark, light, retention_hours: float | None, dry_run: bool
 ) -> dict:
     """VACUUM through the driver-light plane: the expired storage listing
     is spooled to a temp file (driver streams it — constant memory, disk
@@ -3366,10 +3354,10 @@ def _vacuum_light(
     from .fs import executor_fs_safe, get_fs, strip_file_scheme
     from .log import light_collect_cap
 
+    table_path = light.table_path
     fs = get_fs(table_path)
     exec_safe = executor_fs_safe(table_path)
     spool_dir_uri: str | None = None
-    light = DeltaLog(table_path).snapshot_light()
     if retention_hours is None:
         retention_hours = retention_hours_from_interval(
             (light.metadata.get("configuration") or {}).get(
@@ -3764,9 +3752,11 @@ def truncate_table(table_path: str) -> dict:
 
     table_path = normalize_table_path(table_path)
     log = DeltaLog(table_path)
-    spark = _SS.getActiveSession()
-    if spark is not None and log.light_planning_engaged():
+    light = log.light_plane()
+    if light is not None:
         from .writer import ConcurrentWriteError, _check_append_only
+
+        spark = _SS.active()
 
         # one bounded re-plan on a lost watermark race: a benign blind
         # append interleaving with a light TRUNCATE would otherwise
@@ -3777,7 +3767,6 @@ def truncate_table(table_path: str) -> dict:
         # prior-state row-id ranges/metaData that a blind retry would
         # stale-commit; its re-plan is the caller re-running the write.
         for attempt in range(2):
-            light = log.snapshot_light()
             # emptiness probe only — the removed-file count comes from
             # the streamed commit's line tally, so a full checkpoint
             # count here would be a wasted second scan (round-10 review)
@@ -3804,6 +3793,7 @@ def truncate_table(table_path: str) -> dict:
                 if attempt == 1:
                     raise
                 DeltaLog.clear_cache()
+                light = log.snapshot_light()  # re-plan at the new tip
                 continue
             return {"files_removed": n}
     snap = log.snapshot()

@@ -528,23 +528,11 @@ def drop_feature(
     # PRESENCE — not a possibly-absent cardinality field — decides),
     # closing the last known O(table)-driver admin path
     dv_count: int | None = None
-    light = None
-    _spark = None
-    if log.light_planning_engaged():
-        # callers with a session in hand pass it (pond routes,
-        # DeltaTable) — getActiveSession is only the bare-path fallback
-        # and returns None on worker threads, which would silently
-        # degrade to the classic replay (round-10 review)
-        _spark = spark
-        if _spark is None:
-            from pyspark.sql import SparkSession as _SS
-
-            _spark = _SS.getActiveSession()
-    if _spark is not None:
-        light = log.snapshot_light()
-        snap = light.to_snapshot_state([])
-    else:
-        snap = log.snapshot()
+    # callers with a session in hand pass it (pond routes, DeltaTable):
+    # the active session is only the bare-path fallback and is None on
+    # worker threads, which would silently degrade to the classic replay
+    light = log.light_plane(spark=spark)
+    snap = light.to_snapshot_state([]) if light is not None else log.snapshot()
     reader, writer = _explicit_feature_sets(snap.protocol)
     if feature not in reader | writer:
         raise ValueError(
@@ -562,10 +550,11 @@ def drop_feature(
     if light is not None and feature == "deletionVectors":
         # the one non-header blocker, counted AFTER the cheap
         # validations so an invalid request never pays the metadata scan
+        from pyspark.sql import SparkSession
         from pyspark.sql import functions as _F
 
         dv_count = (
-            light.files_df(_spark, full=True)
+            light.files_df(spark or SparkSession.active(), full=True)
             .filter(_F.col("dv_json").isNotNull())
             .count()
         )

@@ -671,6 +671,40 @@ def _stats_match_expr(stats_col, col: str, dt: T.DataType, op: str, val):
     )
 
 
+def prune_condition(snapshot, preds, part_value, stats_col, stats_keys=None):
+    """THE data-skipping predicate compiler behind both executor-side
+    prunes — prune_files_distributed over a classic snapshot's file list
+    and LightSnapshot.prune_df over the checkpoint parquet: one Spark
+    boolean over partition-value strings and raw stats JSON mirroring
+    prune_files (EXACT 3VL on partition columns, CONSERVATIVE on stats:
+    missing/unparseable stats keep the file). Predicates on columns
+    outside the schema or of a type outside _SAFE_PRUNE_TYPES keep every
+    file. `part_value(col)` is the partition-value string Column of
+    `col`; `stats_keys` maps a logical column to its stats-JSON key (the
+    physical name on column-mapped tables)."""
+    from pyspark.sql import functions as F
+
+    schema_types = {f.name: f.dataType for f in snapshot.schema.fields}
+    part_cols = set(snapshot.partition_columns)
+    cond = F.lit(True)
+    for col, op, val in preds:
+        if op not in _OPS:
+            raise ValueError(f"unsupported predicate op: {op!r}")
+        dt = schema_types.get(col)
+        if not isinstance(dt, _SAFE_PRUNE_TYPES):
+            continue  # conservative: keep the file
+        if col in part_cols:
+            pv = part_value(col)
+            pv = F.when(
+                pv == "__HIVE_DEFAULT_PARTITION__", F.lit(None)
+            ).otherwise(pv)
+            cond = cond & _part_match_expr(pv.cast(dt), dt, op, val)
+        else:
+            key = (stats_keys or {}).get(col, col)
+            cond = cond & _stats_match_expr(stats_col, key, dt, op, val)
+    return cond
+
+
 def prune_files_distributed(
     spark, snapshot: SnapshotState, predicates: Iterable[Predicate] | None
 ) -> list[AddFile]:
@@ -707,13 +741,7 @@ def prune_files_distributed(
     data: dict[str, list] = {"_idx": list(range(len(files)))}
     fields = [T.StructField("_idx", T.LongType(), False)]
     for c in need_pv:
-        data[f"_pv_{c}"] = [
-            None
-            if (raw := f.partition_values.get(c)) is None
-            or raw == "__HIVE_DEFAULT_PARTITION__"
-            else raw
-            for f in files
-        ]
+        data[f"_pv_{c}"] = [f.partition_values.get(c) for f in files]
         fields.append(T.StructField(f"_pv_{c}", T.StringType(), True))
     if need_stats:
         # raw log text straight through — the driver never parses stats
@@ -721,15 +749,9 @@ def prune_files_distributed(
         data["_stats"] = [f.stats_json() for f in files]
         fields.append(T.StructField("_stats", T.StringType(), True))
     meta = spark.createDataFrame(pd.DataFrame(data), T.StructType(fields))
-    cond = F.lit(True)
-    for col, op, val in live:
-        dt = schema_types[col]
-        if col in part_cols:
-            cond = cond & _part_match_expr(
-                F.col(f"_pv_{col}").cast(dt), dt, op, val
-            )
-        else:
-            cond = cond & _stats_match_expr(F.col("_stats"), col, dt, op, val)
+    cond = prune_condition(
+        snapshot, live, lambda c: F.col(f"_pv_{c}"), F.col("_stats")
+    )
     keep = sorted(
         r["_idx"] for r in meta.filter(cond).select("_idx").collect()
     )

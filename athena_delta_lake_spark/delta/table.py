@@ -321,9 +321,7 @@ class DeltaTable:
 
     def partition_columns(self) -> list[str]:
         # header-only fact: light state past the threshold, classic below
-        from .writer import _header_state
-
-        return _header_state(self.path).partition_columns
+        return self.log.header().partition_columns
 
     def version(self) -> int:
         return self.log.latest_version()
@@ -350,8 +348,8 @@ class DeltaTable:
         predicate leaves more than log.light_collect_cap survivors."""
         from .log import light_collect_cap
 
-        if self.log.light_planning_engaged(version):
-            light = self.log.snapshot_light(version)
+        light = self.log.light_plane(version, self.spark)
+        if light is not None:
             files = light.collect_pruned_add_files(
                 self.spark, predicates, cap=light_collect_cap()
             )
@@ -450,8 +448,9 @@ class DeltaTable:
         """
         from .reader import read_files
 
-        if self.log.light_planning_engaged(version):
-            n = self._count_light(version, where)
+        light = self.log.light_plane(version, self.spark)
+        if light is not None:
+            n = self._count_light(light, version, where)
             if n is not None:
                 return n
         snap = self.snapshot(version)
@@ -488,7 +487,7 @@ class DeltaTable:
             total += df.count()
         return total
 
-    def _count_light(self, version, where) -> int | None:
+    def _count_light(self, light, version, where) -> int | None:
         """Driver-light metadata count: numRecords minus DV cardinality
         summed EXECUTOR-side over the (pruned) files_df — the driver never
         sees a file list, so counting a 10^7-file table costs O(1) driver
@@ -503,7 +502,6 @@ class DeltaTable:
         from .reader import read_files
         from .stats import _SAFE_PRUNE_TYPES
 
-        light = self.log.snapshot_light(version)
         if isinstance(where, str):
             preds, fully = _parse_where_full(where)
             # same guard as the classic path: a metadata-only answer
@@ -859,10 +857,10 @@ class DeltaTable:
         aggregates (numFiles / sizeInBytes) from one executor-side pass
         over files_df — DESCRIBE DETAIL on a 10^7-file table never builds
         the classic driver-resident file list."""
-        if self.log.light_planning_engaged(None):
+        light = self.log.light_plane(spark=self.spark)
+        if light is not None:
             from pyspark.sql import functions as F
 
-            light = self.log.snapshot_light()
             agg = (
                 light.files_df(self.spark)
                 .agg(

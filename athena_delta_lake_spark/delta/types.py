@@ -132,6 +132,33 @@ def struct_to_schema_string(st: T.StructType) -> str:
     return json.dumps(spark_type_to_delta(st))
 
 
+def logical_to_physical(
+    schema: T.StructType, config: dict | None
+) -> dict[str, str] | None:
+    """Top-level logical→physical column-name map when column mapping is
+    active on the table, else None. Physical names come from the
+    `delta.columnMapping.physicalName` field metadata (defaulting to the
+    logical name, which is what enable_column_mapping assigns so data files
+    written before the upgrade stay readable)."""
+    if (config or {}).get("delta.columnMapping.mode", "none") == "none":
+        return None
+    return {
+        f.name: (f.metadata or {}).get(
+            "delta.columnMapping.physicalName", f.name
+        )
+        for f in schema.fields
+    }
+
+
+def physical_to_logical(
+    schema: T.StructType, config: dict | None
+) -> dict[str, str] | None:
+    """The inverse of logical_to_physical: the log keys partitionValues
+    and stats by PHYSICAL name; this maps them back. None when unmapped."""
+    l2p = logical_to_physical(schema, config)
+    return None if l2p is None else {p: n for n, p in l2p.items()}
+
+
 def cast_partition_value(raw: str | None, dt: T.DataType):
     """Cast a Delta `add.partitionValues` string to a typed Python value.
 

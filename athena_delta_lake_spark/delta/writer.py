@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 
 from .fs import get_fs, is_uri, normalize_table_path, strip_file_scheme
 from .log import DeltaLog
-from .types import struct_to_schema_string
+from .types import logical_to_physical, struct_to_schema_string
 
 _STATS_SAFE_TYPES = (
     T.StringType,
@@ -162,23 +162,6 @@ def _next_version(table_path: str) -> int:
         return DeltaLog(table_path).latest_version() + 1
     except (FileNotFoundError, ValueError):
         return 0
-
-
-def _header_state(table_path: str, version: int | None = None):
-    """Header-only snapshot state (schema/metadata/protocol/txns/domain
-    metadata — NO file list) when light planning is engaged, classic
-    otherwise. Every metadata-only DDL (SET TBLPROPERTIES, ADD/RENAME/
-    DROP COLUMN, constraints, comments, domain metadata) and the shared
-    metadata-commit protocol check used to replay the full classic
-    snapshot: 8.6 GiB / 187 s at 10^7 adds (tools/meta_scale.py) to
-    change one JSON field. Ops that genuinely enumerate files
-    (enable_row_tracking's id allocation, overwrite removes) keep the
-    classic snapshot; commit_rewrite's conflict check replays only the
-    interleaved commits (_rewrite_commute_conflict)."""
-    log = DeltaLog(table_path)
-    if log.light_planning_engaged(version):
-        return log.snapshot_light(version).to_snapshot_state([])
-    return log.snapshot(version)
 
 
 def _ict_enabled(config: dict | None) -> bool:
@@ -362,24 +345,6 @@ def _atomic_commit(log_dir: str, version: int, actions: Iterable[dict]) -> None:
         json.dumps(a, separators=(",", ":")) + "\n" for a in actions
     )
     fs.create_atomic(path, data.encode("utf-8"))
-
-
-def logical_to_physical(
-    schema: T.StructType, config: dict | None
-) -> dict[str, str] | None:
-    """Top-level logical→physical column-name map when column mapping is
-    active on the table, else None. Physical names come from the
-    `delta.columnMapping.physicalName` field metadata (defaulting to the
-    logical name, which is what enable_column_mapping assigns so data files
-    written before the upgrade stay readable)."""
-    if (config or {}).get("delta.columnMapping.mode", "none") == "none":
-        return None
-    return {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in schema.fields
-    }
 
 
 def _schema_type_features(st: T.StructType) -> set[str]:
@@ -768,29 +733,21 @@ def _serializable_read_conflict(
     column mapping, mirroring log replay, before the same prune logic
     that planned the DML's read decides overlap. O(interleaved adds) —
     bounded by what landed during the race window."""
-    from .log import AddFile, DeltaLog, SnapshotState, _decode_path
+    from .log import (
+        AddFile,
+        DeltaLog,
+        SnapshotState,
+        _decode_path,
+        _remap_addfile,
+        addfile_from_action,
+    )
     from .stats import prune_files
+    from .types import physical_to_logical
 
     log = DeltaLog(table_path)
-    p2l = {
-        (f.metadata or {}).get("delta.columnMapping.physicalName", f.name): f.name
-        for f in now_snap.schema.fields
-    }
-
-    def _remap_stats(raw):
-        if raw is None or p2l == {n: n for n in p2l}:
-            return raw
-        import json as _json
-
-        try:
-            st = _json.loads(raw) if isinstance(raw, str) else dict(raw)
-        except (ValueError, TypeError):
-            return None
-        for sec in ("minValues", "maxValues", "nullCount"):
-            if isinstance(st.get(sec), dict):
-                st[sec] = {p2l.get(k, k): v for k, v in st[sec].items()}
-        return st
-
+    p2l = physical_to_logical(
+        now_snap.schema, now_snap.metadata.get("configuration")
+    )
     new_adds: list[AddFile] = []
     removed_paths: set[str] = set()
     for v in range(base_version + 1, now_snap.version + 1):
@@ -802,20 +759,8 @@ def _serializable_read_conflict(
         for action in acts:
             add = action.get("add")
             if add is not None and add.get("dataChange", True):
-                pv = add.get("partitionValues") or {}
-                if isinstance(pv, list):
-                    pv = dict(pv)
-                new_adds.append(
-                    AddFile(
-                        path=_decode_path(add["path"]),
-                        partition_values={
-                            p2l.get(k, k): val for k, val in pv.items()
-                        },
-                        size=int(add.get("size", 0)),
-                        modification_time=int(add.get("modificationTime", 0)),
-                        stats_raw=_remap_stats(add.get("stats")),
-                    )
-                )
+                f = addfile_from_action(add)
+                new_adds.append(_remap_addfile(f, p2l) if p2l else f)
                 continue
             rem = action.get("remove")
             if rem is not None and rem.get("dataChange", True):
@@ -849,19 +794,17 @@ def _serializable_read_conflict(
         # the light-planning threshold the base read set is probed
         # executor-side, restricted to the (interleave-bounded) removed
         # paths — no base-snapshot file list ever reaches the driver.
-        if log.light_planning_engaged(base_version):
+        light = log.light_plane(base_version)
+        if light is not None:
             from pyspark.sql import SparkSession
             from pyspark.sql import functions as F
 
-            spark = SparkSession.getActiveSession()
-            if spark is not None:
-                hit = (
-                    log.snapshot_light(base_version)
-                    .prune_df(spark, read_predicates)
-                    .where(F.col("path").isin(sorted(removed_paths)))
-                    .head(1)
-                )
-                return bool(hit)
+            hit = (
+                light.prune_df(SparkSession.active(), read_predicates)
+                .where(F.col("path").isin(sorted(removed_paths)))
+                .head(1)
+            )
+            return bool(hit)
         base_snap = log.snapshot(base_version)
         read_set = {f.path for f in prune_files(base_snap, read_predicates)}
         return bool(removed_paths & read_set)
@@ -966,7 +909,7 @@ def commit_rewrite(
             }
         )
     version = _next_version(table_path)
-    snap_now = _header_state(table_path)
+    snap_now = DeltaLog(table_path).header()
     _check_write_protocol(snap_now.protocol, table_path)
     table_config = snap_now.metadata.get("configuration")
     row_tracking = _row_tracking_enabled(table_config)
@@ -1071,7 +1014,7 @@ def commit_rewrite(
             if isolation == "serializable" and _serializable_read_conflict(
                 table_path,
                 base_version,
-                _header_state(table_path, version - 1),
+                DeltaLog(table_path).header(version - 1),
                 read_predicates,
                 actions_by_version=interleaved,
             ):
@@ -1226,7 +1169,7 @@ def add_check_constraint(
     list would validate zero rows and accept a violated constraint
     (caught by test_light_planning.test_metadata_ddl_stays_light)."""
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     key = f"{_CONSTRAINT_PREFIX}{name}"
     if key in (snap.metadata.get("configuration") or {}):
         raise ValueError(f"constraint already exists: {name}")
@@ -1266,7 +1209,7 @@ def add_check_constraint(
 def drop_check_constraint(table_path: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT name."""
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     key = f"{_CONSTRAINT_PREFIX}{name}"
     config = dict(snap.metadata.get("configuration") or {})
     if key not in config:
@@ -1424,28 +1367,24 @@ def write_delta(
     light_overwrite = None  # LightSnapshot when overwrite removes stream
     try:
         log0 = DeltaLog(table_path)
-        if (
-            mode == "append"
-            and replace_where is None
-            and log0.light_planning_engaged(None)
-        ):
+        if mode == "append":
             # plain appends never consume prior.files (only overwrite /
-            # replaceWhere build remove lists): header-only light replay,
-            # so tailing a 10^7-file table costs O(header), not 8.5 GiB
-            prior = log0.snapshot_light().to_snapshot_state([])
-        elif (
-            mode == "overwrite"
-            and replace_where is None
-            and _SS_active() is not None
-            and log0.light_planning_engaged(None)
-        ):
-            # plain overwrite: the removes stream from files_df at commit
-            # time (commit_streamed_removes, round-10 ask #3) — the
-            # header-only prior serves every schema/config/identity check
-            light_overwrite = log0.snapshot_light()
-            prior = light_overwrite.to_snapshot_state([])
+            # replaceWhere build remove lists): header-only light replay
+            # past the threshold, so tailing a 10^7-file table costs
+            # O(header), not 8.5 GiB
+            prior = log0.header()
         else:
-            prior = log0.snapshot()
+            if replace_where is None:
+                # plain overwrite: the removes stream from files_df at
+                # commit time (commit_streamed_removes, round-10 ask #3)
+                # — the header-only prior serves every schema/config/
+                # identity check
+                light_overwrite = log0.light_plane(spark=df.sparkSession)
+            prior = (
+                light_overwrite.to_snapshot_state([])
+                if light_overwrite is not None
+                else log0.snapshot()
+            )
     except FileNotFoundError:
         pass
     except ValueError:
@@ -1998,7 +1937,7 @@ def write_delta(
                 ) from None
             # header-only: the retry checks txn HWM, schema names,
             # partition columns, and constraints — never the file list
-            current = _header_state(table_path)
+            current = DeltaLog(table_path).header()
             if (
                 txn_app_id is not None
                 and current.txns.get(txn_app_id, -1) >= txn_version
@@ -2671,7 +2610,7 @@ def _collect_staged_parts(cp_fs, stage: str) -> list:
 
 
 def _write_checkpoint_light(
-    spark, table_path: str, parts: int | None = None, v2: bool = False
+    spark, light, parts: int | None = None, v2: bool = False
 ) -> int:
     """Distributed checkpoint write for the 10^7-file regime (round-8
     verdict ask #5): add actions stream from LightSnapshot.files_df
@@ -2692,19 +2631,16 @@ def _write_checkpoint_light(
     the staged parts into place — a bare Python worker cannot construct
     HadoopFS (no py4j gateway), so get_fs() must never run in a task for
     those schemes (round-9 review)."""
-    import pyarrow as pa
-
     from .log import _read_last_checkpoint
 
-    if v2:
-        _ensure_v2_checkpoint_protocol(table_path, light=True)
-    light = DeltaLog(table_path).snapshot_light()
+    table_path = light.table_path
     version = light.version
     log_dir = os.path.join(table_path, "_delta_log")
     cp_fs = get_fs(table_path)
     meta_rows = _checkpoint_meta_rows(light)
-    p2l = light._physical_to_logical() or {}
-    l2p = {v_: k for k, v_ in p2l.items()}
+    l2p = logical_to_physical(
+        light.schema, light.metadata.get("configuration")
+    ) or {}
     if parts is None:
         # size the parts from the PREVIOUS checkpoint's action count (the
         # engagement gate guarantees one exists) — no counting job needed
@@ -2758,47 +2694,19 @@ def _write_checkpoint_light(
                             "modificationTime": now_ms,
                         }
                     )
-        mrows = [
-            {
-                **{
-                    k: r.get(k)
-                    for k in ("protocol", "txn", "metaData", "domainMetadata")
-                },
-                "checkpointMetadata": None,
-                "sidecar": None,
-            }
-            for r in meta_rows
-        ]
-        mrows.append(
-            {
-                "protocol": None,
-                "txn": None,
-                "metaData": None,
-                "domainMetadata": None,
-                "checkpointMetadata": {"version": version},
-                "sidecar": None,
-            }
-        )
-        for r in results:
-            mrows.append(
-                {
-                    "protocol": None,
-                    "txn": None,
-                    "metaData": None,
-                    "domainMetadata": None,
-                    "checkpointMetadata": None,
-                    "sidecar": {
-                        "path": r["path"],
-                        "sizeInBytes": r["sizeInBytes"],
-                        "modificationTime": r["modificationTime"],
-                    },
-                }
-            )
-        manifest = f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet"
-        _write_parquet_table(
+        _write_v2_manifest(
             cp_fs,
-            pa.Table.from_pylist(mrows, schema=_cp_manifest_schema()),
-            os.path.join(log_dir, manifest),
+            log_dir,
+            version,
+            meta_rows,
+            [
+                {
+                    "path": r["path"],
+                    "sizeInBytes": r["sizeInBytes"],
+                    "modificationTime": r["modificationTime"],
+                }
+                for r in results
+            ],
         )
         last = {"version": version, "size": len(meta_rows) + total_adds}
     else:
@@ -2851,33 +2759,62 @@ def _write_checkpoint_light(
         last = {"version": version, "size": len(meta_rows) + total_adds}
         if n_written > 1:
             last["parts"] = n_written
-    ict = _commit_ict(log_dir, version)
+    _publish_last_checkpoint(cp_fs, log_dir, last)
+    return version
+
+
+def _write_v2_manifest(
+    cp_fs, log_dir: str, version: int, meta_rows: list, sidecars: list
+) -> None:
+    """Write a V2 checkpoint manifest `NNN.checkpoint.<uuid>.parquet`:
+    the header rows (protocol/txn/metaData/domainMetadata), one
+    checkpointMetadata row, then one `sidecar` pointer per sidecar file
+    ({path, sizeInBytes, modificationTime}) — shared by the driver-side
+    and the distributed checkpoint writers."""
+    import pyarrow as pa
+
+    header = ("protocol", "txn", "metaData", "domainMetadata")
+    empty = dict.fromkeys(header + ("checkpointMetadata", "sidecar"))
+    mrows = [empty | {k: r.get(k) for k in header} for r in meta_rows]
+    mrows.append(empty | {"checkpointMetadata": {"version": version}})
+    mrows += [empty | {"sidecar": sc} for sc in sidecars]
+    manifest = f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet"
+    _write_parquet_table(
+        cp_fs,
+        pa.Table.from_pylist(mrows, schema=_cp_manifest_schema()),
+        os.path.join(log_dir, manifest),
+    )
+
+
+def _publish_last_checkpoint(cp_fs, log_dir: str, last: dict) -> None:
+    """Write `_last_checkpoint` — the pointer readers start replay from —
+    as the LAST step of a checkpoint write. Persists the checkpointed
+    commit's inCommitTimestamp: once cleanup_log deletes the predecessor
+    JSONs, _stamp_ict clamps against this instead of trusting the wall
+    clock alone (a clock step backwards would otherwise mint a
+    non-monotonic ICT and break timestamp time travel)."""
+    ict = _commit_ict(log_dir, last["version"])
     if ict is not None:
         last["lastInCommitTimestamp"] = ict
     cp_fs.write_bytes(
         os.path.join(log_dir, "_last_checkpoint"),
         json.dumps(last).encode("utf-8"),
     )
-    return version
 
 
-def _ensure_v2_checkpoint_protocol(table_path: str, light: bool) -> None:
+def _ensure_v2_checkpoint_protocol(table_path: str) -> None:
     """uuid-named checkpoints require the v2Checkpoint reader+writer
     feature (minReaderVersion 3): after cleanup_log a classic reader would
     otherwise chase a _last_checkpoint entry whose file it cannot parse and
     fail undetectably — the protocol gate turns that into a clean
     "unsupported reader feature" error up front. Commits the upgrade if
-    missing (optimistic retry loop). `light` reads the current protocol
-    through the header-only light snapshot so a 10^7-file table never pays
-    a classic replay just to check two protocol integers."""
-
-    def _current():
-        log = DeltaLog(table_path)
-        return log.snapshot_light() if light else log.snapshot()
-
+    missing (optimistic retry loop). The protocol is read from
+    DeltaLog.header, so a 10^7-file table never pays a classic replay just
+    to check two protocol integers."""
     if (
         _protocol_upgrade_action(
-            _current().protocol, reader_features=("v2Checkpoint",)
+            DeltaLog(table_path).header().protocol,
+            reader_features=("v2Checkpoint",),
         )
         is None
     ):
@@ -2885,7 +2822,7 @@ def _ensure_v2_checkpoint_protocol(table_path: str, light: bool) -> None:
     log_dir0 = os.path.join(table_path, "_delta_log")
     for _attempt in range(_MAX_COMMIT_RETRIES + 1):
         v = _next_version(table_path)
-        cur = _current()
+        cur = DeltaLog(table_path).header()
         upgrade = _protocol_upgrade_action(
             cur.protocol, reader_features=("v2Checkpoint",)
         )
@@ -2941,9 +2878,9 @@ def write_checkpoint(
     sidecars are shareable across checkpoints. Replayed by
     log.py:_read_v2_checkpoint.
 
-    Past the light-planning threshold (log.light_planning_engaged) and
-    given a SparkSession — passed explicitly or taken from the active
-    session — the write is DISTRIBUTED (round-8 verdict ask #5): add rows
+    When DeltaLog.light_plane picks the driver-light plane (past the
+    light-planning threshold, with `spark` or an active session) the
+    write is DISTRIBUTED (round-8 verdict ask #5): add rows
     stream from LightSnapshot.files_df executor-side straight into the
     checkpoint parquet, and the driver holds only the header. The classic
     driver-side fold below measured 8.5 GiB RSS at 10^7 adds; the light
@@ -2952,22 +2889,18 @@ def write_checkpoint(
     import pyarrow as pa
     from urllib.parse import quote as _quote
 
-    if DeltaLog(table_path).light_planning_engaged():
-        if spark is None:
-            try:
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-            except Exception:
-                spark = None
-        if spark is not None:
-            return _write_checkpoint_light(
-                spark, table_path, parts=parts, v2=v2
-            )
-    cp_schema = _cp_arrow_schema()
     if v2:
-        _ensure_v2_checkpoint_protocol(table_path, light=False)
-    snap = DeltaLog(table_path).snapshot()
+        _ensure_v2_checkpoint_protocol(table_path)
+    log = DeltaLog(table_path)
+    light = log.light_plane(spark=spark)
+    if light is not None:
+        from pyspark.sql import SparkSession
+
+        return _write_checkpoint_light(
+            spark or SparkSession.active(), light, parts=parts, v2=v2
+        )
+    cp_schema = _cp_arrow_schema()
+    snap = log.snapshot()
     rows = _checkpoint_meta_rows(snap)
     # column-mapped tables: the snapshot normalized partitionValues/stats
     # keys to LOGICAL names at replay; the checkpoint must store them back
@@ -3023,8 +2956,6 @@ def write_checkpoint(
     log_dir = os.path.join(table_path, "_delta_log")
     cp_fs = get_fs(table_path)
     if v2:
-        import uuid
-
         meta_rows = [r for r in rows if r["add"] is None]
         add_rows = [r["add"] for r in rows if r["add"] is not None]
         sidecar_schema = _cp_sidecar_schema()
@@ -3053,38 +2984,8 @@ def write_checkpoint(
                     "modificationTime": int(time.time() * 1000),
                 }
             )
-        manifest_schema = _cp_manifest_schema()
-        mrows = [
-            {**{k: r.get(k) for k in ("protocol", "txn", "metaData", "domainMetadata")},
-             "checkpointMetadata": None, "sidecar": None}
-            for r in meta_rows
-        ]
-        mrows.append(
-            {
-                "protocol": None,
-                "txn": None,
-                "metaData": None,
-                "domainMetadata": None,
-                "checkpointMetadata": {"version": snap.version},
-                "sidecar": None,
-            }
-        )
-        for sc in sidecar_actions:
-            mrows.append(
-                {
-                    "protocol": None,
-                    "txn": None,
-                    "metaData": None,
-                    "domainMetadata": None,
-                    "checkpointMetadata": None,
-                    "sidecar": sc,
-                }
-            )
-        manifest = f"{snap.version:020d}.checkpoint.{uuid.uuid4()}.parquet"
-        _write_parquet_table(
-            cp_fs,
-            pa.Table.from_pylist(mrows, schema=manifest_schema),
-            os.path.join(log_dir, manifest),
+        _write_v2_manifest(
+            cp_fs, log_dir, snap.version, meta_rows, sidecar_actions
         )
         last = {"version": snap.version, "size": len(rows)}
     elif parts is None or parts <= 1:
@@ -3103,17 +3004,7 @@ def write_checkpoint(
             )
             _write_parquet_table(cp_fs, table, cp_path)
         last = {"version": snap.version, "size": len(rows), "parts": parts}
-    # Persist the checkpointed commit's inCommitTimestamp: once cleanup_log
-    # deletes the predecessor JSONs, _stamp_ict clamps against this instead
-    # of trusting the wall clock alone (a clock step backwards would
-    # otherwise mint a non-monotonic ICT and break timestamp time travel).
-    ict = _commit_ict(log_dir, snap.version)
-    if ict is not None:
-        last["lastInCommitTimestamp"] = ict
-    cp_fs.write_bytes(
-        os.path.join(log_dir, "_last_checkpoint"),
-        json.dumps(last).encode("utf-8"),
-    )
+    _publish_last_checkpoint(cp_fs, log_dir, last)
     return snap.version
 
 
@@ -3319,7 +3210,7 @@ def add_columns(
     commit, so a positioned ADD COLUMNS is atomic — no intermediate
     appended-at-end schema for concurrent readers or the streaming
     schema-change guard to trip on."""
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     now = int(time.time() * 1000)
     evolved, md = evolve_schema_metadata(snap, columns)
     new_fields = evolved.fields[len(snap.schema.fields):]
@@ -3548,12 +3439,6 @@ def _staged_commit_chunks(
                 yield block
 
 
-def _SS_active():
-    from pyspark.sql import SparkSession
-
-    return SparkSession.getActiveSession()
-
-
 def _clone_add_line_gen(src_path: str, l2p: dict[str, str] | None):
     """mapInPandas generator factory: LightSnapshot.files_df(full=True)
     rows -> shallow-clone `add` action JSON lines, built entirely
@@ -3623,9 +3508,7 @@ def _clone_add_line_gen(src_path: str, l2p: dict[str, str] | None):
     return gen
 
 
-def _clone_table_light(
-    spark, fs, src_path: str, dst_path: str, version: int | None
-) -> int:
+def _clone_table_light(spark, fs, light, dst_path: str) -> int:
     """Driver-light SHALLOW clone (round-10 ask #2): the clone commit is
     O(table) in BYTES by spec — every add must be listed — but not in
     driver RSS. The classic path materialized the full classic snapshot
@@ -3636,8 +3519,7 @@ def _clone_table_light(
     the single version-0 commit through fs.create_atomic_stream — the
     `_write_checkpoint_light` staging pattern applied to a JSON commit.
     Driver memory: O(header + one I/O chunk)."""
-    log = DeltaLog(src_path)
-    light = log.snapshot_light(version)
+    src_path = light.table_path
     l2p = logical_to_physical(
         light.schema, light.metadata.get("configuration")
     )
@@ -3711,6 +3593,11 @@ def clone_table(
     (shallow=False) additionally copies every data file + DV blob into the
     clone, keeping relative paths/stats byte-identical — storage-level
     isolation when the source may be vacuumed away.
+
+    A shallow clone streams its add lines executor-side
+    (_clone_table_light) when DeltaLog.light_plane picks the driver-light
+    plane at `version` (past the light-planning threshold, with an active
+    session).
     """
     src_path = normalize_table_path(src_path)
     dst_path = normalize_table_path(dst_path)
@@ -3725,13 +3612,13 @@ def clone_table(
         # files_df executor-side (see _clone_table_light); deep clone
         # stays classic — it copies every data file anyway, so the
         # driver-side action loop is not its bottleneck
-        from pyspark.sql import SparkSession as _SS
+        light = DeltaLog(src_path).light_plane(version)
+        if light is not None:
+            from pyspark.sql import SparkSession
 
-        _spark = _SS.getActiveSession()
-        if _spark is not None and DeltaLog(src_path).light_planning_engaged(
-            version
-        ):
-            return _clone_table_light(_spark, fs, src_path, dst_path, version)
+            return _clone_table_light(
+                SparkSession.active(), fs, light, dst_path
+            )
     snap = DeltaLog(src_path).snapshot(version)
     l2p = logical_to_physical(snap.schema, snap.metadata.get("configuration"))
 
@@ -3946,7 +3833,7 @@ def _commit_metadata_change(
     snapshot protocol — passing it saves a SECOND header replay per DDL
     (every caller just derived `md` from a snapshot that carries it)."""
     if protocol is None:
-        protocol = _header_state(table_path).protocol
+        protocol = DeltaLog(table_path).header().protocol
     _check_write_protocol(protocol, table_path)
     log_dir = os.path.join(table_path, "_delta_log")
     actions = [
@@ -4027,7 +3914,7 @@ def _assign_row_ids(
     }
 
 
-def _enable_row_tracking_light(spark, table_path: str) -> int:
+def _enable_row_tracking_light(spark, light) -> int:
     """enable_row_tracking past the light-planning threshold (round-10
     ask #4): the backfill — every live add re-committed with a fresh
     baseRowId — runs EXECUTOR-side. Id ranges come from a distributed
@@ -4045,8 +3932,7 @@ def _enable_row_tracking_light(spark, table_path: str) -> int:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    log = DeltaLog(table_path)
-    light = log.snapshot_light()
+    table_path = light.table_path
     config = dict(light.metadata.get("configuration") or {})
     if _row_tracking_enabled(config):
         return light.version
@@ -4213,10 +4099,13 @@ def enable_row_tracking(table_path: str) -> int:
     (_enable_row_tracking_light) instead of walking the classic snapshot.
     """
     table_path = normalize_table_path(table_path)
-    _spark = _SS_active()
-    if _spark is not None and DeltaLog(table_path).light_planning_engaged():
-        return _enable_row_tracking_light(_spark, table_path)
-    snap = DeltaLog(table_path).snapshot()
+    log = DeltaLog(table_path)
+    light = log.light_plane()
+    if light is not None:
+        from pyspark.sql import SparkSession
+
+        return _enable_row_tracking_light(SparkSession.active(), light)
+    snap = log.snapshot()
     config = dict(snap.metadata.get("configuration") or {})
     if _row_tracking_enabled(config):
         return snap.version
@@ -4322,7 +4211,7 @@ def set_table_comment(table_path: str, comment: str | None) -> int:
     """COMMENT ON TABLE: set/clear `metaData.description` (the Delta
     spec's table-comment field) as a metadata-only commit."""
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     md = dict(snap.metadata)
     if comment:
         md["description"] = comment
@@ -4357,7 +4246,7 @@ def set_table_properties(
             "must be backfilled with baseRowId ranges)"
         )
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     prior_config = dict(snap.metadata.get("configuration") or {})
     config = {**prior_config, **{k: str(v) for k, v in properties.items()}}
     now = int(time.time() * 1000)
@@ -4413,7 +4302,7 @@ def set_table_properties(
 def unset_table_properties(table_path: str, keys: list[str]) -> int:
     """ALTER TABLE ... UNSET TBLPROPERTIES (IF EXISTS semantics)."""
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     config = dict(snap.metadata.get("configuration") or {})
     dropped = [k for k in keys if k in config]
     if not dropped:
@@ -4448,7 +4337,7 @@ def enable_column_mapping(table_path: str) -> int:
     which is the only viable shape for a 100 TB table.
     """
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     config = dict(snap.metadata.get("configuration") or {})
     if config.get("delta.columnMapping.mode", "none") != "none":
         return snap.version
@@ -4498,7 +4387,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     name. Works for partition columns too (partitionColumns metadata is
     logical; partition dirs/values stay physical)."""
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     config = snap.metadata.get("configuration") or {}
     if config.get("delta.columnMapping.mode", "none") == "none":
         raise ValueError(
@@ -4595,7 +4484,7 @@ def alter_column_type(table_path: str, column: str, new_type) -> int:
     table_path = normalize_table_path(table_path)
     if isinstance(new_type, str):
         new_type = _parse_simple_type(new_type)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     field = next((f for f in snap.schema.fields if f.name == column), None)
     if field is None:
         raise ValueError(f"no such column: {column}")
@@ -4657,7 +4546,7 @@ def drop_column(table_path: str, name: str) -> int:
     same logical name gets a FRESH id + physical name and reads NULL from
     old files (never the dropped column's bytes), per the Delta spec."""
     table_path = normalize_table_path(table_path)
-    snap = _header_state(table_path)
+    snap = DeltaLog(table_path).header()
     config = snap.metadata.get("configuration") or {}
     if config.get("delta.columnMapping.mode", "none") == "none":
         raise ValueError(
@@ -4702,7 +4591,7 @@ def set_domain_metadata(
         # rebuilt per attempt: the protocol upgrade (if any) must come from
         # the CURRENT snapshot, or a retry after losing a race would clobber
         # features a concurrent writer just added
-        snap = _header_state(table_path)
+        snap = DeltaLog(table_path).header()
         actions = [
             {
                 "commitInfo": {
@@ -4833,7 +4722,7 @@ def cleanup_log(table_path: str, retention_hours: float | None = None) -> dict:
         try:
             # configuration is a header fact — never replay the file list
             # to read one retention key
-            cfg = _header_state(table_path).metadata.get("configuration")
+            cfg = DeltaLog(table_path).header().metadata.get("configuration")
         except (FileNotFoundError, ValueError):
             cfg = None
         retention_hours = retention_hours_from_interval(

@@ -1931,7 +1931,7 @@ def _ensure_light_planned_table(spark: SparkSession, sf_dir: str) -> str:
         os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
         try:
             t = DeltaTable(spark, path)
-            assert t.log.light_planning_engaged()
+            assert t.log.light_plane(spark=spark) is not None
             t.delete(where="o_totalprice < 10000")  # v2: light-planned
         finally:
             if prev is None:
@@ -1973,7 +1973,7 @@ def g20(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
     try:
         t = DeltaTable(spark, path)
-        assert t.log.light_planning_engaged()
+        assert t.log.light_plane(spark=spark) is not None
         df = (
             t.to_df(where="o_orderdate >= '1995-01-01'")
             .groupBy("o_orderpriority")
@@ -2034,7 +2034,7 @@ def _ensure_light_merged_table(spark: SparkSession, sf_dir: str) -> str:
         os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
         try:
             t = DeltaTable(spark, path)
-            assert t.log.light_planning_engaged()
+            assert t.log.light_plane(spark=spark) is not None
             res = t.merge(src, keys=["o_orderkey"])  # v2: light-planned
             assert res["planning"] == "light", res
         finally:
@@ -2207,7 +2207,7 @@ def _ensure_light_checkpointed_table(spark: SparkSession, sf_dir: str) -> str:
         os.environ["ADLS_CHECKPOINT_PART_ROWS"] = "3"
         try:
             t = DeltaTable(spark, path)
-            assert t.log.light_planning_engaged()
+            assert t.log.light_plane(spark=spark) is not None
             v = t.checkpoint()  # distributed, multi-part
             multi = [
                 f
@@ -2295,7 +2295,7 @@ def _ensure_light_maintained_table(spark: SparkSession, sf_dir: str) -> str:
         os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
         try:
             t = DeltaTable(spark, path)
-            assert t.log.light_planning_engaged()
+            assert t.log.light_plane(spark=spark) is not None
             res = dml.compact(spark, path, target_file_size=1 << 30)
             assert res["planning"] == "light", res
             assert res["files_removed"] > 0, res
@@ -2398,7 +2398,7 @@ def g25(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = os.environ.get("ADLS_LIGHT_PLANNING_FILES")
     os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
     try:
-        assert DeltaLog(path).light_planning_engaged()
+        assert DeltaLog(path).light_plane(spark=spark) is not None
         ch = table_changes(spark, path, 1, 2)
         out = (
             ch.groupBy(
@@ -2442,7 +2442,7 @@ def _ensure_light_rewrite_tables(spark: SparkSession, sf_dir: str) -> tuple:
         prev = os.environ.get("ADLS_LIGHT_PLANNING_FILES")
         os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
         try:
-            assert DeltaLog(path).light_planning_engaged()
+            assert DeltaLog(path).light_plane(spark=spark) is not None
             write_delta(  # light overwrite: removes stream executor-side
                 o.where("o_orderkey % 6 = 0").repartition(3),
                 path,
@@ -2514,7 +2514,7 @@ def _ensure_light_restore_table(spark: SparkSession, sf_dir: str) -> str:
         os.environ["ADLS_LIGHT_PLANNING_FILES"] = "1"
         try:
             log = DeltaLog(path)
-            assert log.light_planning_engaged(1), (
+            assert log.light_plane(1, spark) is not None, (
                 "below-checkpoint target did not engage light"
             )
             restore_table(path, version=1)  # light pre-checkpoint restore

@@ -69,7 +69,11 @@ from pyspark.sql.datasource import (
 
 from ..delta.log import DeltaLog
 from ..delta.stats import make_file_filter
-from ..delta.types import cast_partition_value
+from ..delta.types import (
+    cast_partition_value,
+    logical_to_physical,
+    physical_to_logical,
+)
 from ..delta.writer import _atomic_commit, _file_stats, _next_version
 
 _PUSHABLE = {
@@ -80,6 +84,11 @@ _PUSHABLE = {
     LessThanOrEqual: "<=",
 }
 
+
+# Readers get the table schema from DataSource.schema() but not the
+# table configuration: its field metadata came from the table header, so
+# a field's physicalName (the logical name when absent) is authoritative.
+_SCHEMA_MAPPED = {"delta.columnMapping.mode": "name"}
 
 # a scheme of 2+ chars followed by ':/' — matches s3a:/b and s3a://b but
 # not a relative path with a bare colon ('weird:name') or 'file:'
@@ -168,10 +177,7 @@ def _read_file_batches(
     part_cols = set(partition_values)
     # column mapping: files store PHYSICAL names (field metadata carries
     # the logical->physical map); identity for unmapped tables
-    phys = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-        for f in schema.fields
-    }
+    phys = logical_to_physical(schema, _SCHEMA_MAPPED)
     want = [phys[f.name] for f in schema.fields if f.name not in part_cols]
     pf = pq.ParquetFile(file_path)
     present = [c for c in want if c in pf.schema_arrow.names]
@@ -779,10 +785,7 @@ class DeltaPondStreamReader(DataSourceStreamReader):
         if self._cdf:
             return self._cdf_partitions(log, first_v, ev)
         # column mapping: raw add actions key partitionValues physically
-        p2l = {
-            (f.metadata or {}).get("delta.columnMapping.physicalName", f.name): f.name
-            for f in self._schema.fields
-        }
+        p2l = physical_to_logical(self._schema, _SCHEMA_MAPPED)
         parts = []
         for v in range(first_v, ev + 1):
             adds = []
@@ -1023,25 +1026,14 @@ class _AddsMessage(WriterCommitMessage):
     adds: list = field(default_factory=list)
 
 
-def _header_snapshot(table_path: str):
-    """Schema/configuration/txns/domain-metadata WITHOUT materializing
-    the file list — the shared writer helper (one copy of the light-
-    routing decision; round-9 review found three)."""
-    from ..delta.writer import _header_state
-
-    return _header_state(table_path)
-
-
 def _target_l2p(table_path: str) -> dict | None:
     """logical->physical map of an EXISTING column-mapped target (else
     None) — resolved driver-side at writer construction and shipped in the
     writer closure, so executor tasks never replay the log."""
     try:
-        snap = _header_snapshot(table_path)
+        snap = DeltaLog(table_path).header()
     except (FileNotFoundError, ValueError):
         return None
-    from ..delta.writer import logical_to_physical
-
     return logical_to_physical(snap.schema, snap.metadata.get("configuration"))
 
 
@@ -1175,16 +1167,14 @@ def _commit_adds(
         # document)
         log0 = DeltaLog(table_path)
         if overwrite:
-            from pyspark.sql import SparkSession as _SS
-
-            _spark = _SS.getActiveSession()
-            if _spark is not None and log0.light_planning_engaged():
-                light_overwrite = log0.snapshot_light()
-                prior = light_overwrite.to_snapshot_state([])
-            else:
-                prior = log0.snapshot()
+            light_overwrite = log0.light_plane()
+            prior = (
+                light_overwrite.to_snapshot_state([])
+                if light_overwrite is not None
+                else log0.snapshot()
+            )
         else:
-            prior = _header_snapshot(table_path)
+            prior = log0.header()
         prior_names = {f.name for f in prior.schema.fields}
         if {f.name for f in schema.fields} != prior_names:
             raise ValueError(
@@ -1251,7 +1241,7 @@ def _commit_adds(
         from ..delta.writer import commit_streamed_removes
 
         v_out, _n = commit_streamed_removes(
-            _SS.getActiveSession(),
+            _SS.active(),
             table_path,
             operation,
             actions,
@@ -1335,7 +1325,7 @@ class DeltaPondStreamWriter(DataSourceStreamArrowWriter):
 
     def _last_committed_epoch(self) -> int:
         try:
-            snap = _header_snapshot(self._path)
+            snap = DeltaLog(self._path).header()
         except (FileNotFoundError, ValueError):
             return -1
         # snapshot replay tracks SetTransaction high-water marks (and the

@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame, Row
 
 from .delta.fs import normalize_table_path
+from .delta.log import DeltaLog
 from .delta.stats import _session_tzinfo as _stats_session_tzinfo
 from pyspark.sql import functions as F
 
@@ -270,9 +271,7 @@ def _relation_parts(rel) -> list[str]:
 def _dv_mode(path: str) -> bool:
     """Delta semantics: DML uses merge-on-read (deletion vectors) when
     the table sets delta.enableDeletionVectors=true, else copy-on-write."""
-    from .delta.writer import _header_state
-
-    cfg = _header_state(normalize_table_path(path)).metadata.get(
+    cfg = DeltaLog(normalize_table_path(path)).header().metadata.get(
         "configuration"
     ) or {}
     return str(cfg.get("delta.enableDeletionVectors", "")).lower() == "true"
@@ -302,11 +301,10 @@ def _route_insert(pond, p, text: str) -> DataFrame:
 
     from .delta.writer import (
         _generation_expressions,
-        _header_state,
         _identity_fields,
     )
 
-    snap = _header_state(normalize_table_path(path))
+    snap = DeltaLog(normalize_table_path(path)).header()
     fields = {f.name: f for f in snap.schema.fields}
     target_cols = [f.name for f in snap.schema.fields]
     # engine-assigned columns (GENERATED ALWAYS AS IDENTITY / (expr)) are
@@ -661,11 +659,10 @@ def _route_create_table(pond, p, text: str, replace: bool = False) -> DataFrame:
         from .delta.types import struct_to_schema_string
         from .delta.writer import (
             _commit_metadata_change,
-            _header_state,
             _protocol_upgrade_action,
         )
 
-        snap = _header_state(normalize_table_path(path))
+        snap = DeltaLog(normalize_table_path(path)).header()
         order_wrong = [f.name for f in snap.schema.fields] != declared
         upgrade = (
             _protocol_upgrade_action(
@@ -756,9 +753,7 @@ def _route_overwrite_by_expr(pond, p, text: str) -> DataFrame:
     if qtext is None:
         raise ValueError("cannot recover the REPLACE WHERE source query text")
     df = pond.sql(qtext)
-    from .delta.writer import _header_state
-
-    snap = _header_state(normalize_table_path(path))
+    snap = DeltaLog(normalize_table_path(path)).header()
     fields = {f.name: f for f in snap.schema.fields}
     target_cols = [f.name for f in snap.schema.fields]
     if len(df.columns) != len(target_cols):
@@ -1202,7 +1197,6 @@ def _route_drop_namespace(pond, p, text: str) -> DataFrame:
     # fs facade, not shutil: a URI pond root (file:///…, s3a://…) is not
     # an OS path (same class as the CREATE-route fix, round-11 review)
     pond._fs.delete(os.path.join(pond.root, parts[0]), recursive=True)
-    from .delta.log import DeltaLog
 
     DeltaLog.clear_cache()
     return _metrics_df(
@@ -1358,9 +1352,9 @@ def _alter_field_metadata(
 ) -> int:
     """Metadata-only commit mutating one top-level field's metadata keys
     (None value = remove the key)."""
-    from .delta.writer import _commit_metadata_change, _header_state
+    from .delta.writer import _commit_metadata_change
 
-    snap = _header_state(path)
+    snap = DeltaLog(path).header()
     if col not in {f.name for f in snap.schema.fields}:
         raise ValueError(f"no such column: {col}")
     schema_obj = json.loads(snap.metadata["schemaString"])
@@ -1383,9 +1377,9 @@ def _alter_column_position(path: str, col: str, after: str | None) -> int:
     """ALTER COLUMN c FIRST | AFTER x: reorder top-level columns —
     metadata-only (readers project by name; parquet layout is untouched,
     which is why this is safe at any table size)."""
-    from .delta.writer import _commit_metadata_change, _header_state
+    from .delta.writer import _commit_metadata_change
 
-    snap = _header_state(path)
+    snap = DeltaLog(path).header()
     names = [f.name for f in snap.schema.fields]
     if col not in names:
         raise ValueError(f"no such column: {col}")
@@ -1413,9 +1407,9 @@ def _alter_column_nullability(pond, path: str, col: str, nullable: bool) -> int:
     """DROP NOT NULL (relax — always safe) / SET NOT NULL (tighten —
     must prove no existing NULLs first, one limit(1) probe)."""
     from .delta.table import DeltaTable
-    from .delta.writer import _commit_metadata_change, _header_state
+    from .delta.writer import _commit_metadata_change
 
-    snap = _header_state(path)
+    snap = DeltaLog(path).header()
     if col not in {f.name for f in snap.schema.fields}:
         raise ValueError(f"no such column: {col}")
     if not nullable:
@@ -1456,11 +1450,10 @@ def _alter_column_set_default(pond, path: str, col: str, sql_text: str) -> int:
     the column existed) and declares the allowColumnDefaults feature."""
     from .delta.writer import (
         _commit_metadata_change,
-        _header_state,
         _protocol_upgrade_action,
     )
 
-    snap = _header_state(path)
+    snap = DeltaLog(path).header()
     if col not in {f.name for f in snap.schema.fields}:
         raise ValueError(f"no such column: {col}")
     # the default must evaluate (and be constant-foldable) up front
@@ -1489,13 +1482,13 @@ def _route_cluster_by(pond, p, text: str) -> DataFrame:
     """ALTER TABLE t CLUSTER BY (cols) | NONE: change (or retire) the
     liquid-clustering policy — pure domain-metadata commit; the layout
     actually changes at the next OPTIMIZE, which reads the policy."""
-    from .delta.writer import _header_state, set_domain_metadata
+    from .delta.writer import set_domain_metadata
 
     path = _target(pond, _relation_parts(p.table()))
     spec = p.clusterBySpec()
     if spec.isDefined():
         names = [c.toString() for c in _seq(spec.get().columnNames())]
-        snap = _header_state(path)
+        snap = DeltaLog(path).header()
         known = {f.name for f in snap.schema.fields}
         missing = [n for n in names if n not in known]
         if missing:
@@ -1606,10 +1599,8 @@ def _route_describe(pond, p, text: str) -> DataFrame:
 
 
 def _route_show_tblproperties(pond, p, text: str) -> DataFrame:
-    from .delta.writer import _header_state
-
     path = _target(pond, _relation_parts(p.table()))
-    cfg = _header_state(normalize_table_path(path)).metadata.get(
+    cfg = DeltaLog(normalize_table_path(path)).header().metadata.get(
         "configuration"
     ) or {}
     key = _opt(p.propertyKey())
@@ -1645,9 +1636,7 @@ def _route_create_table_like(pond, p, text: str) -> DataFrame:
         raise ValueError(f"table {schema}.{table} already exists")
     src_path = _target(pond, _ti_parts(p.sourceTable()))
     if pond._is_delta_dir(src_path):
-        from .delta.writer import _header_state
-
-        snap = _header_state(normalize_table_path(src_path))
+        snap = DeltaLog(normalize_table_path(src_path)).header()
         st, part_cols = snap.schema, list(snap.partition_columns)
         config = dict(snap.metadata.get("configuration") or {})
     else:  # plain-parquet source: schema only
@@ -1672,8 +1661,6 @@ def _route_rename_table(pond, p, text: str) -> DataFrame:
     """ALTER TABLE t RENAME TO t2: in the storage-layout catalog a table
     IS its directory, so rename = one atomic directory move (any table
     size; the Delta log travels with it because add paths are relative)."""
-    from .delta.log import DeltaLog
-
     src_parts = _relation_parts(p.child())
     src_name = ".".join(src_parts)
     dst_parts0 = _seq(p.newName())
@@ -1753,9 +1740,7 @@ def _route_show_create_table(pond, p, text: str) -> DataFrame:
     path = _target(pond, parts)
     name = ".".join(parts) if len(parts) == 2 else parts[0]
     if pond._is_delta_dir(path):
-        from .delta.writer import _header_state
-
-        snap = _header_state(normalize_table_path(path))
+        snap = DeltaLog(normalize_table_path(path)).header()
         st, part_cols = snap.schema, list(snap.partition_columns)
         md = snap.metadata
         config = dict(md.get("configuration") or {})
@@ -1972,7 +1957,6 @@ def _route_clone(pond, m) -> DataFrame:
     previously required dropping to the Python API. Default (no keyword)
     is DEEP, matching Delta's CLONE semantics; SHALLOW is the
     metadata-only variant."""
-    from .delta.log import DeltaLog
     from .delta.writer import clone_table
 
     or_replace = m.group(1) is not None
@@ -2213,19 +2197,19 @@ def _route_analyze(pond, m) -> DataFrame:
     (per-file size + numRecords stats): ZERO data scan; the scan
     fallback runs only when some file lacks numRecords and NOSCAN was
     not given."""
-    from .delta.log import DeltaLog, _fast_num_records
+    from .delta.log import _fast_num_records
     from .delta.writer import set_table_properties
 
     path = _target(pond, m.group(1).replace("`", "").split("."))
     log = DeltaLog(path)
-    if log.light_planning_engaged(None):
+    light = log.light_plane(spark=pond.spark)
+    if light is not None:
         # the fold is pure file-metadata arithmetic: one executor-side
         # pass over files_df (size + stats numRecords + DV cardinality)
         # — ANALYZE of a 10^7-file table never builds the classic
         # driver-resident file list
         from pyspark.sql import functions as F
 
-        light = log.snapshot_light()
         row = (
             light.files_df(pond.spark)
             .select(
@@ -2322,7 +2306,7 @@ def _route_analyze_columns(pond, path: str, cols_clause: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from .delta.log import DeltaLog, typed_partition_values
+    from .delta.log import typed_partition_values
     from .delta.reader import read_snapshot
     from .delta.stats import _coerce, _stats_value
     from .delta.writer import set_table_properties
@@ -2331,9 +2315,8 @@ def _route_analyze_columns(pond, path: str, cols_clause: str) -> DataFrame:
     # past the light threshold the per-file stats FOLD (provability walk,
     # min/max/nullCount) runs executor-side over LightSnapshot.files_df —
     # the classic driver loop below is O(table) RSS at 10^7 files
-    _spark_l = pond.spark if log.light_planning_engaged() else None
-    if _spark_l is not None:
-        light = log.snapshot_light()
+    light = log.light_plane(spark=pond.spark)
+    if light is not None:
         schema = light.schema
         snap = None
         snap_version = light.version
@@ -2360,11 +2343,11 @@ def _route_analyze_columns(pond, path: str, cols_clause: str) -> DataFrame:
     )
     out: dict[str, dict] = {c: {} for c in cols}
     scan_minmax: list[str] = []
-    if _spark_l is not None:
+    if light is not None:
         out, scan_minmax = _fold_log_stats_light(
             pond.spark, light, cols, _EXACT_STATS_TYPES
         )
-    for c in cols if _spark_l is None else []:
+    for c in cols if light is None else []:
         dt = snap.schema[c].dataType
         if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
             # timestamps fold zone-free from stats strings but the LIGHT
@@ -2451,7 +2434,7 @@ def _route_analyze_columns(pond, path: str, cols_clause: str) -> DataFrame:
                 mx_c.alias(f"__mx__{i}"),
                 F.sum(F.col(c).isNull().cast("long")).alias(f"__nc__{i}"),
             ]
-    if _spark_l is not None:
+    if light is not None:
         # the ndv/fallback scan reads the SAME pinned light version as
         # the fold (a concurrent commit must not make distinctCount and
         # the folded min/max describe different tables). Planning
@@ -2541,10 +2524,13 @@ def _fold_log_stats_light(spark, light, cols: list, exact_types) -> tuple:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from .delta.types import logical_to_physical
+
     schema = light.schema
     part_cols = set(light.partition_columns)
-    p2l = light._physical_to_logical() or {}
-    l2p = {v: k for k, v in p2l.items()}
+    l2p = logical_to_physical(
+        light.schema, light.metadata.get("configuration")
+    ) or {}
     fdf = light.files_df(spark, full=True)
     has_dv = F.col("dv_json").isNotNull()
     nr = F.get_json_object("stats", "$.numRecords").cast("long")

@@ -1208,7 +1208,7 @@ def test_sink_header_paths_stay_light(spark, tmp_path, monkeypatch):
 
     # header helpers never touch the classic snapshot
     assert dps._target_l2p(path) is None  # not column-mapped
-    assert dps._header_snapshot(path).schema is not None
+    assert DeltaLog(path).header().schema is not None
     # an append commit through the sink plumbing stays light
     v = dps._commit_adds(
         path,
