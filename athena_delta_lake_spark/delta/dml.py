@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fs import get_fs, normalize_table_path
-from .log import AddFile, DeltaLog, SnapshotState
+from .log import AddFile, DeltaLog, SnapshotState, add_action, remap_addfile
 from .reader import read_files
 from .stats import Predicate, prune_files_auto
 from .types import logical_to_physical
@@ -532,12 +533,17 @@ def _dv_pieces(
     full_set = {f.path for f in full_files}
     dv_targets = [(f, d) for f, d in touched if f.path not in full_set]
 
+    # re-add each file in the log's physical-keyed form with its new DV;
+    # its row-id range travels with it (same rows, ids never re-assigned)
     l2p = _l2p(snap)
-    adds: list[dict] = []
-    for f, desc in dv_targets:
-        add = _physical_readd(f, l2p)
-        add["deletionVector"] = desc
-        adds.append({"add": add})
+    adds = [
+        {
+            "add": add_action(
+                replace(remap_addfile(f, l2p), deletion_vector=desc), True
+            )
+        }
+        for f, desc in dv_targets
+    ]
 
     extra = None
     features = set(snap.protocol.get("readerFeatures") or [])
@@ -3078,16 +3084,15 @@ def restore_table(
         )
 
     # the restored metadata is the TARGET's, so physical names come from
-    # the target snapshot's mapping (see _physical_readd)
+    # the target snapshot's mapping; DVs and row-id ranges are re-added
+    # verbatim (the same rows)
     tgt_l2p = logical_to_physical(
         target.schema, target.metadata.get("configuration")
     )
-    adds: list[dict] = []
-    for f in sorted(to_add, key=lambda f: f.path):
-        add = _physical_readd(f, tgt_l2p)
-        if f.deletion_vector is not None:
-            add["deletionVector"] = f.deletion_vector
-        adds.append({"add": add})
+    adds = [
+        {"add": add_action(remap_addfile(f, tgt_l2p), True)}
+        for f in sorted(to_add, key=lambda f: f.path)
+    ]
 
     from .writer import _ict_enabled
 
@@ -3689,45 +3694,6 @@ def _data_schema(snap: SnapshotState):
     return T.StructType(
         [f for f in snap.schema.fields if f.name not in snap.partition_columns]
     )
-
-
-def _physical_readd(f: AddFile, l2p) -> dict:
-    """Rebuild the add-action body for re-committing an EXISTING file (DV
-    re-adds, RESTORE): partitionValues/stats keys mapped back to PHYSICAL
-    names (snapshot replay normalizes them to logical names on
-    column-mapped tables, log.py:439-476 — committing the logical names
-    back would break the physical-name convention stage_data_files and
-    checkpoints use), and the row-tracking id range carried verbatim —
-    a re-add is the SAME rows, so its ids must not be re-assigned."""
-    import json as _json
-    from urllib.parse import quote
-
-    def _phys(d):
-        if not d or not l2p:
-            return d
-        return {l2p.get(k, k): v for k, v in d.items()}
-
-    add = {
-        "path": quote(f.path, safe="/="),
-        "partitionValues": _phys(f.partition_values) or {},
-        "size": f.size,
-        "modificationTime": f.modification_time,
-        "dataChange": True,
-    }
-    stats = f.stats
-    if stats is not None:
-        if l2p:
-            stats = {
-                **stats,
-                "minValues": _phys(stats.get("minValues")),
-                "maxValues": _phys(stats.get("maxValues")),
-                "nullCount": _phys(stats.get("nullCount")),
-            }
-        add["stats"] = _json.dumps(stats, separators=(",", ":"))
-    if f.base_row_id is not None:
-        add["baseRowId"] = f.base_row_id
-        add["defaultRowCommitVersion"] = f.default_row_commit_version
-    return add
 
 
 def truncate_table(table_path: str) -> dict:

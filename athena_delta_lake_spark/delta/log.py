@@ -32,6 +32,7 @@ import os
 import re
 import time
 from dataclasses import dataclass, field
+from urllib.parse import quote as _quote
 
 from pyspark.sql import types as T
 
@@ -90,11 +91,11 @@ class AddFile:
         return d["_stats_cache"]
 
     def stats_json(self) -> str | None:
-        """Stats as a compact JSON string — zero-parse passthrough when
-        replay kept the original log text (checkpoint writes, distributed
-        pruning)."""
+        """Stats as a compact JSON string (None when absent or empty) —
+        zero-parse passthrough when replay kept the original log text
+        (checkpoint writes, distributed pruning)."""
         raw = self.stats_raw
-        if raw is None or isinstance(raw, str):
+        if not raw or isinstance(raw, str):
             return raw or None
         return json.dumps(raw, separators=(",", ":"))
 
@@ -186,18 +187,24 @@ class SnapshotState:
         return spark.createDataFrame(rows, schema)
 
 
-def _remap_addfile(f: AddFile, p2l: dict[str, str]) -> AddFile:
-    """Normalize one log-form (physical-keyed) AddFile of a column-mapped
-    table to LOGICAL names: partitionValues keys and the stats
-    minValues/maxValues/nullCount keys — the same normalization
-    snapshot()/snapshot_light() apply to materialized adds."""
-    stats = f.stats
+def remap_addfile(f: AddFile, name_map: dict[str, str] | None) -> AddFile:
+    """Rename one AddFile's column keys through `name_map`: its
+    partitionValues keys and its stats minValues/maxValues/nullCount keys.
+    This is the package's only such rename, used in both directions on
+    column-mapped tables — physical->logical (`physical_to_logical`) when
+    replay or a pruned collect normalizes log-form adds, logical->physical
+    (`logical_to_physical`) before add_action re-emits a live file. With
+    no map it returns `f` itself: no copy and no stats parse, so unmapped
+    tables pass the log's stats text through untouched."""
+    if not name_map:
+        return f
 
     def _remap(d):
         if not d:
             return d
-        return {p2l.get(k, k): v for k, v in d.items()}
+        return {name_map.get(k, k): v for k, v in d.items()}
 
+    stats = f.stats
     if stats:
         stats = {
             **stats,
@@ -205,6 +212,8 @@ def _remap_addfile(f: AddFile, p2l: dict[str, str]) -> AddFile:
             "maxValues": _remap(stats.get("maxValues")),
             "nullCount": _remap(stats.get("nullCount")),
         }
+    # the constructor, not dataclasses.replace: this runs once per add
+    # in every replay of a mapped table
     return AddFile(
         path=f.path,
         partition_values=_remap(f.partition_values) or {},
@@ -215,6 +224,74 @@ def _remap_addfile(f: AddFile, p2l: dict[str, str]) -> AddFile:
         base_row_id=f.base_row_id,
         default_row_commit_version=f.default_row_commit_version,
     )
+
+
+def _null(x):
+    """None for a SQL NULL as Spark Rows and mapInPandas batches hand it
+    over: None, NaN (nullable longs arrive as float64) or pd.NA."""
+    if x is None:
+        return None
+    try:
+        return None if x != x else x
+    except TypeError:  # pd.NA has no truth value
+        return None
+
+
+def _opt_int(x) -> int | None:
+    x = _null(x)
+    return None if x is None else int(x)
+
+
+def addfile_from_files_row(r, l2p: dict[str, str] | None = None) -> AddFile:
+    """One `LightSnapshot.files_df(full=True)` row — a Spark Row or a
+    pandas record dict — as a LOG-FORM AddFile, the same shape
+    addfile_from_action yields for the file's commit or checkpoint row:
+    partition keys mapped back to physical names with `l2p` (files_df
+    exposes them logical), the raw stats text kept as is (it is already
+    physical), the DV descriptor decoded from its JSON column."""
+    pv = dict(_null(r["partition_values"]) or {})
+    if l2p:
+        pv = {l2p.get(k, k): v for k, v in pv.items()}
+    dvj = _null(r["dv_json"])
+    return AddFile(
+        path=r["path"],
+        partition_values=pv,
+        size=_opt_int(r["size"]),
+        modification_time=_opt_int(r["modification_time"]),
+        stats_raw=_null(r["stats"]) or None,
+        deletion_vector=json.loads(dvj) if dvj else None,
+        base_row_id=_opt_int(r["base_row_id"]),
+        default_row_commit_version=_opt_int(r["default_rcv"]),
+    )
+
+
+def add_action(f: AddFile, data_change: bool) -> dict:
+    """The `add` action body for a LOG-FORM AddFile — the inverse of
+    addfile_from_action, and the one encoder for every live file the
+    package re-emits (checkpoint rows, clone commits, the row-tracking
+    backfill, DV re-adds, RESTORE). The path is percent-encoded as commit
+    JSONs store it, stats_json() passes the stats text through untouched,
+    and absent optional fields are left out: commit JSON omits them and
+    a checkpoint's pa.Table.from_pylist fills them with null. A file
+    carrying a row-id range emits baseRowId and defaultRowCommitVersion
+    together."""
+    add = {
+        "path": _quote(f.path, safe="/="),
+        "partitionValues": f.partition_values or {},
+        "size": f.size,
+        "modificationTime": f.modification_time,
+        "dataChange": data_change,
+    }
+    stats = f.stats_json()
+    if stats:
+        add["stats"] = stats
+    if f.deletion_vector:
+        add["deletionVector"] = f.deletion_vector
+    if f.base_row_id is not None:
+        add["baseRowId"] = f.base_row_id
+    if f.base_row_id is not None or f.default_row_commit_version is not None:
+        add["defaultRowCommitVersion"] = f.default_row_commit_version
+    return add
 
 
 @dataclass
@@ -418,7 +495,7 @@ class LightSnapshot:
                 for f in _iter_batch_adds(batch):
                     if f.path in dead:
                         continue
-                    yield _remap_addfile(f, p2l) if p2l else f
+                    yield remap_addfile(f, p2l)
         yield from self.overlay_adds
 
     def prune_df(self, spark, predicates, full: bool = False):
@@ -475,34 +552,13 @@ class LightSnapshot:
         Row objects never double the AddFile footprint."""
         if full_df is None:
             full_df = self.prune_df(spark, predicates, full=True)
+        l2p = logical_to_physical(
+            self.schema, self.metadata.get("configuration")
+        )
         p2l = self._physical_to_logical()
 
-        def _remap_stats(raw: str | None):
-            if raw is None or not p2l:
-                return raw
-            try:
-                stats = json.loads(raw)
-            except (ValueError, TypeError):
-                return raw
-            for k in ("minValues", "maxValues", "nullCount"):
-                d = stats.get(k)
-                if d:
-                    stats[k] = {p2l.get(c, c): v for c, v in d.items()}
-            return stats
-
         def _to_add(r) -> AddFile:
-            return AddFile(
-                path=r["path"],
-                partition_values=dict(r["partition_values"] or {}),
-                size=r["size"],
-                modification_time=r["modification_time"],
-                stats_raw=_remap_stats(r["stats"]),
-                deletion_vector=(
-                    json.loads(r["dv_json"]) if r["dv_json"] else None
-                ),
-                base_row_id=r["base_row_id"],
-                default_row_commit_version=r["default_rcv"],
-            )
+            return remap_addfile(addfile_from_files_row(r, l2p), p2l)
 
         if cap is not None:
             rows = full_df.limit(cap + 1).collect()
@@ -1129,7 +1185,7 @@ class DeltaLog:
         raw_stats = None if include_files else [f.stats_json() for f in adds]
         p2l = physical_to_logical(schema, acc.metadata.get("configuration"))
         if p2l:
-            adds = [_remap_addfile(f, p2l) for f in adds]
+            adds = [remap_addfile(f, p2l) for f in adds]
         return _Replay(
             header=dict(
                 version=version,

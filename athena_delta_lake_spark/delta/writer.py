@@ -42,13 +42,20 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import replace
 from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .fs import get_fs, is_uri, normalize_table_path, strip_file_scheme
-from .log import DeltaLog
+from .log import (
+    AddFile,
+    DeltaLog,
+    add_action,
+    addfile_from_files_row,
+    remap_addfile,
+)
 from .types import logical_to_physical, struct_to_schema_string
 
 _STATS_SAFE_TYPES = (
@@ -738,8 +745,8 @@ def _serializable_read_conflict(
         DeltaLog,
         SnapshotState,
         _decode_path,
-        _remap_addfile,
         addfile_from_action,
+        remap_addfile,
     )
     from .stats import prune_files
     from .types import physical_to_logical
@@ -760,7 +767,7 @@ def _serializable_read_conflict(
             add = action.get("add")
             if add is not None and add.get("dataChange", True):
                 f = addfile_from_action(add)
-                new_adds.append(_remap_addfile(f, p2l) if p2l else f)
+                new_adds.append(remap_addfile(f, p2l))
                 continue
             rem = action.get("remove")
             if rem is not None and rem.get("dataChange", True):
@@ -2313,61 +2320,22 @@ def _cp_manifest_schema():
     )
 
 
-_CP_DV_FIELDS = (
-    "storageType",
-    "pathOrInlineDv",
-    "offset",
-    "sizeInBytes",
-    "cardinality",
-)
+def _batch_files(pdf, l2p: dict | None):
+    """The log-form AddFiles of one LightSnapshot.files_df(full=True)
+    pandas batch (addfile_from_files_row per row). Runs EXECUTOR-side
+    under mapInPandas: the light checkpoint, clone and row-tracking
+    writers all read their files through it."""
+    return (addfile_from_files_row(r, l2p) for r in pdf.to_dict("records"))
 
 
-def _cp_add_rows(pdf, l2p: dict) -> list[dict]:
-    """One LightSnapshot.files_df(full=True) pandas batch -> checkpoint
-    `add` struct dicts, byte-shape-identical to the classic driver-side
-    fold: paths re-percent-encoded (files_df decodes them), partition keys
-    mapped back to PHYSICAL names on column-mapped tables (stats are
-    already physical — the light frame never re-keys them), dataChange
-    False. Runs EXECUTOR-side under _write_checkpoint_light."""
-    from urllib.parse import quote as _quote
-
-    import pandas as pd
-
-    def _opt_int(x):
-        return None if pd.isna(x) else int(x)
-
-    out = []
-    for path, pv, size, mt, stats, dvj, brid, drcv in zip(
-        pdf["path"],
-        pdf["partition_values"],
-        pdf["size"],
-        pdf["modification_time"],
-        pdf["stats"],
-        pdf["dv_json"],
-        pdf["base_row_id"],
-        pdf["default_rcv"],
-    ):
-        pv = dict(pv) if isinstance(pv, dict) else {}
-        if l2p:
-            pv = {l2p.get(k, k): v for k, v in pv.items()}
-        dv = None
-        if isinstance(dvj, str) and dvj:
-            raw = json.loads(dvj)
-            dv = {k: raw.get(k) for k in _CP_DV_FIELDS}
-        out.append(
-            {
-                "path": _quote(path, safe="/="),
-                "partitionValues": pv,
-                "size": _opt_int(size),
-                "modificationTime": _opt_int(mt),
-                "dataChange": False,
-                "stats": stats if isinstance(stats, str) else None,
-                "deletionVector": dv,
-                "baseRowId": _opt_int(brid),
-                "defaultRowCommitVersion": _opt_int(drcv),
-            }
-        )
-    return out
+def _checkpoint_add_batches(batches, l2p: dict | None):
+    """files_df(full=True) pandas batches -> lists of checkpoint `add`
+    dicts (add_action, dataChange false), empty batches skipped — the
+    same rows the classic writer folds driver-side."""
+    for pdf in batches:
+        adds = [add_action(f, False) for f in _batch_files(pdf, l2p)]
+        if adds:
+            yield adds
 
 
 def _stream_parquet(dst: str, schema, tables) -> int:
@@ -2420,35 +2388,25 @@ def _sidecar_part_writer(sidecar_dir: str, l2p: dict):
     uuid-named — no fixed count to honor)."""
 
     def fn(batches):
+        import itertools
+
         import pandas as pd
         import pyarrow as pa
 
         sc_schema = _cp_sidecar_schema()
-        it = iter(batches)
-        first_rows: list[dict] = []
-        for pdf in it:
-            first_rows = _cp_add_rows(pdf, l2p)
-            if first_rows:
-                break
-        if not first_rows:
+        it = _checkpoint_add_batches(batches, l2p)
+        first = next(it, None)
+        if first is None:
             return
         n = 0
 
         def row_tables():
             nonlocal n
-            n += len(first_rows)
-            yield pa.Table.from_pylist(
-                [{"add": a, "remove": None} for a in first_rows],
-                schema=sc_schema,
-            )
-            for pdf in it:
-                rows = _cp_add_rows(pdf, l2p)
-                if rows:
-                    n += len(rows)
-                    yield pa.Table.from_pylist(
-                        [{"add": a, "remove": None} for a in rows],
-                        schema=sc_schema,
-                    )
+            for rows in itertools.chain([first], it):
+                n += len(rows)
+                yield pa.Table.from_pylist(
+                    [{"add": a} for a in rows], schema=sc_schema
+                )
 
         name = f"{uuid.uuid4()}.parquet"
         size = _stream_parquet(
@@ -2495,23 +2453,11 @@ def _classic_part_writer(
             nonlocal n
             if pid == 0:
                 yield pa.Table.from_pylist(meta_rows, schema=cp_schema)
-            for pdf in batches:
-                rows = _cp_add_rows(pdf, l2p)
-                if rows:
-                    n += len(rows)
-                    yield pa.Table.from_pylist(
-                        [
-                            {
-                                "protocol": None,
-                                "txn": None,
-                                "metaData": None,
-                                "domainMetadata": None,
-                                "add": a,
-                            }
-                            for a in rows
-                        ],
-                        schema=cp_schema,
-                    )
+            for rows in _checkpoint_add_batches(batches, l2p):
+                n += len(rows)
+                yield pa.Table.from_pylist(
+                    [{"add": a} for a in rows], schema=cp_schema
+                )
 
         _stream_parquet(os.path.join(log_dir, name), cp_schema, row_tables())
         yield pd.DataFrame({"part": [pid], "adds": [n]})
@@ -2547,13 +2493,11 @@ def _staged_classic_rows(l2p, meta_rows, cols):
                 [{c: r.get(c) for c in cols} for r in meta_rows],
                 columns=cols,
             )
-        for pdf in batches:
-            rows = _cp_add_rows(pdf, l2p)
-            if rows:
-                yield pd.DataFrame(
-                    [dict.fromkeys(cols) | {"add": a} for a in rows],
-                    columns=cols,
-                )
+        for rows in _checkpoint_add_batches(batches, l2p):
+            yield pd.DataFrame(
+                [dict.fromkeys(cols) | {"add": a} for a in rows],
+                columns=cols,
+            )
 
     return fn
 
@@ -2566,13 +2510,10 @@ def _staged_sidecar_rows(l2p, cols):
     def fn(batches):
         import pandas as pd
 
-        for pdf in batches:
-            rows = _cp_add_rows(pdf, l2p)
-            if rows:
-                yield pd.DataFrame(
-                    [{"add": a, "remove": None} for a in rows],
-                    columns=cols,
-                )
+        for rows in _checkpoint_add_batches(batches, l2p):
+            yield pd.DataFrame(
+                [{"add": a, "remove": None} for a in rows], columns=cols
+            )
 
     return fn
 
@@ -2609,6 +2550,24 @@ def _collect_staged_parts(cp_fs, stage: str) -> list:
     )
 
 
+def _light_part_count(table_path: str) -> int:
+    """Task partitions for an executor-side pass over every live file of
+    a light-planned table: ~ADLS_CHECKPOINT_PART_ROWS actions each
+    (default 10^6), at most 256, sized from the PREVIOUS checkpoint's
+    action count in `_last_checkpoint` (the light-planning gate
+    guarantees one exists) — no counting job. Shared by the distributed
+    checkpoint and the light row-tracking backfill."""
+    from .log import _read_last_checkpoint
+
+    per_part = max(
+        1, int(os.environ.get("ADLS_CHECKPOINT_PART_ROWS", "1000000"))
+    )
+    log_dir = os.path.join(table_path, "_delta_log")
+    prev = _read_last_checkpoint(get_fs(log_dir), log_dir) or {}
+    approx = max(1, int(prev.get("size") or 0))
+    return max(1, min(256, -(-approx // per_part)))
+
+
 def _write_checkpoint_light(
     spark, light, parts: int | None = None, v2: bool = False
 ) -> int:
@@ -2619,9 +2578,9 @@ def _write_checkpoint_light(
     the header rows and one (name, size, count) row per part. The classic
     path folds every AddFile through pyarrow driver-side: measured
     8.5 GiB RSS / 186 s at 10^7 adds (tools/meta_scale.py); this path is
-    O(header). Row shape matches the classic writer exactly (same
-    _cp_arrow_schema; physical-keyed partitionValues/stats,
-    percent-encoded paths) — replay-equality-tested in
+    O(header). Each row is add_action of the file's log-form AddFile
+    (addfile_from_files_row), the encoder the classic writer uses too, in
+    the same _cp_arrow_schema — replay-equality-tested in
     tests/test_checkpoint_light.py.
 
     Two executor-side write strategies, picked by executor_fs_safe:
@@ -2631,8 +2590,6 @@ def _write_checkpoint_light(
     the staged parts into place — a bare Python worker cannot construct
     HadoopFS (no py4j gateway), so get_fs() must never run in a task for
     those schemes (round-9 review)."""
-    from .log import _read_last_checkpoint
-
     table_path = light.table_path
     version = light.version
     log_dir = os.path.join(table_path, "_delta_log")
@@ -2641,17 +2598,7 @@ def _write_checkpoint_light(
     l2p = logical_to_physical(
         light.schema, light.metadata.get("configuration")
     ) or {}
-    if parts is None:
-        # size the parts from the PREVIOUS checkpoint's action count (the
-        # engagement gate guarantees one exists) — no counting job needed
-        per_part = max(
-            1, int(os.environ.get("ADLS_CHECKPOINT_PART_ROWS", "1000000"))
-        )
-        prev = _read_last_checkpoint(get_fs(log_dir), log_dir) or {}
-        approx = max(1, int(prev.get("size") or 0))
-        n_parts = max(1, min(256, -(-approx // per_part)))
-    else:
-        n_parts = max(1, parts)
+    n_parts = _light_part_count(table_path) if parts is None else max(1, parts)
     fdf = light.files_df(spark, full=True).repartition(n_parts)
     from .fs import executor_fs_safe
 
@@ -2885,9 +2832,9 @@ def write_checkpoint(
     checkpoint parquet, and the driver holds only the header. The classic
     driver-side fold below measured 8.5 GiB RSS at 10^7 adds; the light
     path is O(header + one row per part). Layout and row shape are
-    identical either way (same _cp_arrow_schema)."""
+    identical either way: the same _cp_arrow_schema, every add row built
+    by log.add_action."""
     import pyarrow as pa
-    from urllib.parse import quote as _quote
 
     if v2:
         _ensure_v2_checkpoint_protocol(table_path)
@@ -2899,65 +2846,23 @@ def write_checkpoint(
         return _write_checkpoint_light(
             spark or SparkSession.active(), light, parts=parts, v2=v2
         )
-    cp_schema = _cp_arrow_schema()
     snap = log.snapshot()
-    rows = _checkpoint_meta_rows(snap)
+    meta_rows = _checkpoint_meta_rows(snap)
     # column-mapped tables: the snapshot normalized partitionValues/stats
-    # keys to LOGICAL names at replay; the checkpoint must store them back
-    # under PHYSICAL names (spec — external readers key off physical)
+    # keys to LOGICAL names at replay; the checkpoint stores them back
+    # under PHYSICAL names (spec — external readers key off physical).
+    # Unmapped tables pass the raw stats text through unparsed (at 10^6
+    # adds parse+re-dump dominated the write, tools/meta_scale.py)
     cp_l2p = logical_to_physical(
         snap.schema, snap.metadata.get("configuration")
     )
-
-    def _phys_keys(d: dict | None) -> dict | None:
-        if not d or not cp_l2p:
-            return d
-        return {cp_l2p.get(k, k): v for k, v in d.items()}
-
-    for f in snap.files:
-        if cp_l2p:
-            stats = f.stats
-            if stats:
-                stats = {
-                    **stats,
-                    "minValues": _phys_keys(stats.get("minValues")),
-                    "maxValues": _phys_keys(stats.get("maxValues")),
-                    "nullCount": _phys_keys(stats.get("nullCount")),
-                }
-            stats_str = (
-                json.dumps(stats, separators=(",", ":")) if stats else None
-            )
-        else:
-            # zero-parse passthrough of the raw log text (the common,
-            # unmapped case — at 10^6 adds parse+re-dump dominated the
-            # checkpoint write, tools/meta_scale.py)
-            stats_str = f.stats_json()
-        rows.append(
-            {
-                "protocol": None,
-                "txn": None,
-                "metaData": None,
-                "add": {
-                    # snapshot paths are URL-decoded; checkpoints store the
-                    # same percent-encoded form as commit JSONs (replay
-                    # unquotes both identically)
-                    "path": _quote(f.path, safe="/="),
-                    "partitionValues": _phys_keys(f.partition_values) or {},
-                    "size": f.size,
-                    "modificationTime": f.modification_time,
-                    "dataChange": False,
-                    "stats": stats_str,
-                    "deletionVector": f.deletion_vector,
-                    "baseRowId": f.base_row_id,
-                    "defaultRowCommitVersion": f.default_row_commit_version,
-                },
-            }
-        )
+    add_rows = [
+        add_action(remap_addfile(f, cp_l2p), False) for f in snap.files
+    ]
     log_dir = os.path.join(table_path, "_delta_log")
     cp_fs = get_fs(table_path)
+    last = {"version": snap.version, "size": len(meta_rows) + len(add_rows)}
     if v2:
-        meta_rows = [r for r in rows if r["add"] is None]
-        add_rows = [r["add"] for r in rows if r["add"] is not None]
         sidecar_schema = _cp_sidecar_schema()
         sidecar_dir = os.path.join(log_dir, "_sidecars")
         cp_fs.mkdirs(sidecar_dir)
@@ -2972,8 +2877,7 @@ def write_checkpoint(
             sc_size = _write_parquet_table(
                 cp_fs,
                 pa.Table.from_pylist(
-                    [{"add": a, "remove": None} for a in piece],
-                    schema=sidecar_schema,
+                    [{"add": a} for a in piece], schema=sidecar_schema
                 ),
                 os.path.join(sidecar_dir, name),
             )
@@ -2987,23 +2891,27 @@ def write_checkpoint(
         _write_v2_manifest(
             cp_fs, log_dir, snap.version, meta_rows, sidecar_actions
         )
-        last = {"version": snap.version, "size": len(rows)}
-    elif parts is None or parts <= 1:
-        table = pa.Table.from_pylist(rows, schema=cp_schema)
-        cp_path = os.path.join(log_dir, f"{snap.version:020d}.checkpoint.parquet")
-        _write_parquet_table(cp_fs, table, cp_path)
-        last = {"version": snap.version, "size": len(rows)}
     else:
-        chunk = -(-len(rows) // parts)
-        for i in range(parts):
-            piece = rows[i * chunk : (i + 1) * chunk]
-            table = pa.Table.from_pylist(piece, schema=cp_schema)
-            cp_path = os.path.join(
-                log_dir,
-                f"{snap.version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet",
+        cp_schema = _cp_arrow_schema()
+        rows = meta_rows + [{"add": a} for a in add_rows]
+        n_parts = max(1, parts or 1)
+        chunk = -(-len(rows) // n_parts)
+        for i in range(n_parts):
+            name = (
+                f"{snap.version:020d}.checkpoint.parquet"
+                if n_parts == 1
+                else f"{snap.version:020d}.checkpoint."
+                f"{i + 1:010d}.{n_parts:010d}.parquet"
             )
-            _write_parquet_table(cp_fs, table, cp_path)
-        last = {"version": snap.version, "size": len(rows), "parts": parts}
+            _write_parquet_table(
+                cp_fs,
+                pa.Table.from_pylist(
+                    rows[i * chunk : (i + 1) * chunk], schema=cp_schema
+                ),
+                os.path.join(log_dir, name),
+            )
+        if n_parts > 1:
+            last["parts"] = n_parts
     _publish_last_checkpoint(cp_fs, log_dir, last)
     return snap.version
 
@@ -3439,73 +3347,132 @@ def _staged_commit_chunks(
                 yield block
 
 
-def _clone_add_line_gen(src_path: str, l2p: dict[str, str] | None):
-    """mapInPandas generator factory: LightSnapshot.files_df(full=True)
-    rows -> shallow-clone `add` action JSON lines, built entirely
-    EXECUTOR-side (absolute-path rewrite, percent-encoding, logical->
-    physical partition keys, DV descriptor u->p absolutization — the same
-    transforms the classic driver loop applies per file). Stats embed as
-    the checkpoint's RAW string: it is already physical-keyed (the log's
-    own form), so no remap round-trip is paid."""
+def _add_lines(l2p: dict | None, transform):
+    """mapInPandas fn: LightSnapshot.files_df(full=True) batches -> one
+    `add` action JSON line per live file, EXECUTOR-side. `transform`
+    turns the file's log-form AddFile (_batch_files) into the add dict
+    the operation re-emits — add_action of the file as the operation
+    lists it — so the stats text rides along unparsed."""
 
     def gen(batches):
-        import json as _j
+        import pandas as pd
 
-        import pandas as _pd
-        from urllib.parse import quote as _quote
-
-        from athena_delta_lake_spark.delta.deletion_vectors import (
-            dv_absolute_path,
-        )
-        from athena_delta_lake_spark.delta.fs import is_uri as _is_uri
-
-        src = src_path.rstrip("/")
         for pdf in batches:
-            lines = []
-            for path, pv, size, mtime, stats, dvj, brid, drcv in zip(
-                pdf["path"],
-                pdf["partition_values"],
-                pdf["size"],
-                pdf["modification_time"],
-                pdf["stats"],
-                pdf["dv_json"],
-                pdf["base_row_id"],
-                pdf["default_rcv"],
-            ):
-                absolute = path.startswith("/") or _is_uri(path)
-                full = path if absolute else f"{src}/{path}"
-                dv = _j.loads(dvj) if dvj else None
-                if dv and dv.get("storageType") == "u":
-                    dv = {
-                        **dv,
-                        "storageType": "p",
-                        "pathOrInlineDv": dv_absolute_path(src_path, dv),
-                    }
-                add = {
-                    "path": _quote(full, safe="/="),
-                    "partitionValues": {
-                        (l2p or {}).get(k, k): v
-                        for k, v in (pv or {}).items()
-                    },
-                    "size": int(size),
-                    "modificationTime": int(mtime),
-                    "dataChange": True,
+            yield pd.DataFrame(
+                {
+                    "line": [
+                        json.dumps(
+                            {"add": transform(f)}, separators=(",", ":")
+                        )
+                        for f in _batch_files(pdf, l2p)
+                    ]
                 }
-                if stats:
-                    add["stats"] = stats
-                if dv:
-                    add["deletionVector"] = dv
-                if brid is not None and not _pd.isna(brid):
-                    add["baseRowId"] = int(brid)
-                    add["defaultRowCommitVersion"] = (
-                        int(drcv)
-                        if drcv is not None and not _pd.isna(drcv)
-                        else None
-                    )
-                lines.append(_j.dumps({"add": add}, separators=(",", ":")))
-            yield _pd.DataFrame({"line": lines})
+            )
 
     return gen
+
+
+def _shallow_clone_file(f: AddFile, src_path: str) -> AddFile:
+    """A source file as a shallow clone lists it: a relative data path
+    joined to the source root (the spec allows absolute add paths), and a
+    relative (`u`) DV descriptor rewritten to an absolute `p` one so the
+    clone resolves the source's DV blob."""
+    from .deletion_vectors import dv_absolute_path
+
+    path = f.path
+    if not (path.startswith("/") or is_uri(path)):
+        path = f"{src_path.rstrip('/')}/{path}"
+    dv = f.deletion_vector
+    if dv and dv.get("storageType") == "u":
+        dv = {
+            **dv,
+            "storageType": "p",
+            "pathOrInlineDv": dv_absolute_path(src_path, dv),
+        }
+    return replace(f, path=path, deletion_vector=dv)
+
+
+def _deep_clone_file(fs, f: AddFile, src_path: str, dst_path: str) -> AddFile:
+    """Copy one source file (and its DV blob) under a deep clone and
+    return the file as the clone lists it: relative paths and stats kept,
+    an absolute DV path re-pointed at the clone's copy."""
+    from .deletion_vectors import dv_absolute_path
+
+    dv = f.deletion_vector
+    if f.path.startswith("/") or is_uri(f.path):
+        # deep-cloning a table that itself holds absolute add paths
+        # (e.g. a shallow clone): materialize the bytes under the
+        # clone with a generated RELATIVE path — joining an absolute
+        # path would resolve to the source file itself (copy onto
+        # itself) and leave the clone non-isolated
+        src_file = f.path
+        path = f"part-{uuid.uuid4().hex}-{os.path.basename(f.path)}"
+    else:
+        src_file = os.path.join(src_path, f.path)
+        path = f.path
+    dst_file = os.path.join(dst_path, path)
+    fs.mkdirs(os.path.dirname(dst_file))
+    fs.copy(src_file, dst_file)
+    if dv and dv.get("storageType") in ("u", "p"):
+        dv_src = dv_absolute_path(src_path, dv)
+        if dv_src.startswith(src_path.rstrip("/") + "/"):
+            # preserve the relative layout (uuid descriptors may
+            # carry a random dir prefix that resolution re-appends)
+            rel = dv_src[len(src_path.rstrip("/")) + 1 :]
+            dv_dst = os.path.join(dst_path, rel)
+            fs.mkdirs(os.path.dirname(dv_dst))
+            fs.copy(dv_src, dv_dst)
+            if dv.get("storageType") == "p":
+                dv = {**dv, "pathOrInlineDv": dv_dst}
+        # an absolute "p" outside the source dir stays shared
+    return replace(f, path=path, deletion_vector=dv)
+
+
+def _clone_header(snap, src_path: str, shallow: bool) -> list[dict]:
+    """The clone commit's leading actions — commitInfo, the source's
+    protocol, its metaData under a fresh table id, and its domain
+    metadata. `snap` is a SnapshotState or a LightSnapshot. Domain
+    metadata travels with the clone above all for the rowTracking
+    high-water mark: without it the clone's first append restarts id
+    allocation at -1 and mints ids that collide with materialized ids
+    carried inside copied rewritten files."""
+    now = int(time.time() * 1000)
+    header: list[dict] = [
+        {
+            "commitInfo": {
+                "timestamp": now,
+                "operation": "CLONE",
+                "operationParameters": {
+                    "source": src_path,
+                    "sourceVersion": snap.version,
+                    "isShallow": shallow,
+                },
+                "engineInfo": "athena_delta_lake_spark",
+            }
+        }
+    ]
+    if snap.protocol:
+        header.append({"protocol": snap.protocol})
+    header.append(
+        {
+            "metaData": {
+                **snap.metadata,
+                "id": str(uuid.uuid4()),
+                "createdTime": now,
+            }
+        }
+    )
+    for domain, cfg in sorted(snap.domain_metadata.items()):
+        header.append(
+            {
+                "domainMetadata": {
+                    "domain": domain,
+                    "configuration": cfg,
+                    "removed": False,
+                }
+            }
+        )
+    return header
 
 
 def _clone_table_light(spark, fs, light, dst_path: str) -> int:
@@ -3518,47 +3485,23 @@ def _clone_table_light(spark, fs, light, dst_path: str) -> int:
     staged dir, and the driver CONCATENATES the parts chunk-by-chunk into
     the single version-0 commit through fs.create_atomic_stream — the
     `_write_checkpoint_light` staging pattern applied to a JSON commit.
-    Driver memory: O(header + one I/O chunk)."""
+    Driver memory: O(header + one I/O chunk). The header (_clone_header)
+    and the per-file transform (_shallow_clone_file + add_action) are the
+    classic clone's; only the file source and the commit sink differ."""
     src_path = light.table_path
     l2p = logical_to_physical(
         light.schema, light.metadata.get("configuration")
     )
-    now = int(time.time() * 1000)
-    md = dict(light.metadata)
-    md["id"] = str(uuid.uuid4())
-    md["createdTime"] = now
-    header: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src_path,
-                    "sourceVersion": light.version,
-                    "isShallow": True,
-                },
-                "engineInfo": "athena_delta_lake_spark",
-            }
-        }
-    ]
-    if light.protocol:
-        header.append({"protocol": light.protocol})
-    header.append({"metaData": md})
-    for domain, cfg in sorted(light.domain_metadata.items()):
-        header.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": cfg,
-                    "removed": False,
-                }
-            }
-        )
+    header = _clone_header(light, src_path, True)
     dst_log = os.path.join(dst_path, "_delta_log")
     fs.mkdirs(dst_log)
-    _stamp_ict(header, dst_log, 0, md.get("configuration"))
+    _stamp_ict(header, dst_log, 0, light.metadata.get("configuration"))
     lines_df = light.files_df(spark, full=True).mapInPandas(
-        _clone_add_line_gen(src_path, l2p), schema="line string"
+        _add_lines(
+            l2p,
+            lambda f: add_action(_shallow_clone_file(f, src_path), True),
+        ),
+        schema="line string",
     )
     commit_path = os.path.join(dst_log, f"{0:020d}.json")
     with _staged_tmp_dir(fs, dst_log, "clone") as stage:
@@ -3621,134 +3564,22 @@ def clone_table(
             )
     snap = DeltaLog(src_path).snapshot(version)
     l2p = logical_to_physical(snap.schema, snap.metadata.get("configuration"))
-
-    def _phys(d: dict | None) -> dict | None:
-        if not d or not l2p:
-            return d
-        return {l2p.get(k, k): v for k, v in d.items()}
-
-    from urllib.parse import quote
-
-    from .deletion_vectors import dv_absolute_path
-
-    now = int(time.time() * 1000)
-    adds: list[dict] = []
+    actions = _clone_header(snap, src_path, shallow)
     for f in snap.files:
-        stats = f.stats
-        if stats and l2p:
-            stats = {
-                **stats,
-                "minValues": _phys(stats.get("minValues")),
-                "maxValues": _phys(stats.get("maxValues")),
-                "nullCount": _phys(stats.get("nullCount")),
-            }
-        dv = f.deletion_vector
-        absolute = f.path.startswith("/") or is_uri(f.path)
-        if shallow:
-            path = (
-                f.path
-                if absolute
-                else src_path.rstrip("/") + "/" + f.path
-            )
-            if dv and dv.get("storageType") == "u":
-                dv = {
-                    **dv,
-                    "storageType": "p",
-                    "pathOrInlineDv": dv_absolute_path(src_path, dv),
-                }
-        else:
-            if absolute:
-                # deep-cloning a table that itself holds absolute add paths
-                # (e.g. a shallow clone): materialize the bytes under the
-                # clone with a generated RELATIVE path — joining an absolute
-                # path would resolve to the source file itself (copy onto
-                # itself) and leave the clone non-isolated
-                src_file = f.path
-                path = f"part-{uuid.uuid4().hex}-{os.path.basename(f.path)}"
-            else:
-                src_file = os.path.join(src_path, f.path)
-                path = f.path
-            dst_file = os.path.join(dst_path, path)
-            fs.mkdirs(os.path.dirname(dst_file))
-            fs.copy(src_file, dst_file)
-            if dv and dv.get("storageType") in ("u", "p"):
-                dv_src = dv_absolute_path(src_path, dv)
-                if dv_src.startswith(src_path.rstrip("/") + "/"):
-                    # preserve the relative layout (uuid descriptors may
-                    # carry a random dir prefix that resolution re-appends)
-                    rel = dv_src[len(src_path.rstrip("/")) + 1 :]
-                    dv_dst = os.path.join(dst_path, rel)
-                    fs.mkdirs(os.path.dirname(dv_dst))
-                    fs.copy(dv_src, dv_dst)
-                    if dv.get("storageType") == "p":
-                        dv = {**dv, "pathOrInlineDv": dv_dst}
-                # an absolute "p" outside the source dir stays shared
-        adds.append(
-            {
-                "add": {
-                    "path": quote(path, safe="/="),
-                    "partitionValues": _phys(f.partition_values) or {},
-                    "size": f.size,
-                    "modificationTime": f.modification_time,
-                    "dataChange": True,
-                    **(
-                        {"stats": json.dumps(stats, separators=(",", ":"))}
-                        if stats
-                        else {}
-                    ),
-                    **({"deletionVector": dv} if dv else {}),
-                    # row tracking: a cloned file is the SAME rows — its id
-                    # range must travel with it or never-rewritten files
-                    # read NULL _row_id on the clone side
-                    **(
-                        {
-                            "baseRowId": f.base_row_id,
-                            "defaultRowCommitVersion": f.default_row_commit_version,
-                        }
-                        if f.base_row_id is not None
-                        else {}
-                    ),
-                }
-            }
+        f = remap_addfile(f, l2p)
+        f = (
+            _shallow_clone_file(f, src_path)
+            if shallow
+            else _deep_clone_file(fs, f, src_path, dst_path)
         )
-    md = dict(snap.metadata)
-    md["id"] = str(uuid.uuid4())
-    md["createdTime"] = now
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src_path,
-                    "sourceVersion": snap.version,
-                    "isShallow": shallow,
-                },
-                "engineInfo": "athena_delta_lake_spark",
-            }
-        }
-    ]
-    if snap.protocol:
-        actions.append({"protocol": snap.protocol})
-    actions.append({"metaData": md})
-    # domain metadata travels with the clone — above all the rowTracking
-    # high-water mark: without it the clone's first append restarts id
-    # allocation at -1 and mints ids that collide with materialized ids
-    # carried inside copied rewritten files.
-    for domain, cfg in sorted(snap.domain_metadata.items()):
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": cfg,
-                    "removed": False,
-                }
-            }
-        )
-    actions.extend(adds)
-    fs.mkdirs(os.path.join(dst_path, "_delta_log"))
-    _stamp_ict(actions, os.path.join(dst_path, "_delta_log"), 0, md.get("configuration"))
-    _atomic_commit(os.path.join(dst_path, "_delta_log"), 0, actions)
+        # dataChange true; a file's row-id range travels with it (a
+        # cloned file is the SAME rows — never-rewritten files would
+        # otherwise read NULL _row_id on the clone side)
+        actions.append({"add": add_action(f, True)})
+    dst_log = os.path.join(dst_path, "_delta_log")
+    fs.mkdirs(dst_log)
+    _stamp_ict(actions, dst_log, 0, snap.metadata.get("configuration"))
+    _atomic_commit(dst_log, 0, actions)
     DeltaLog.clear_cache()
     return 0
 
@@ -3903,7 +3734,12 @@ def _assign_row_ids(
         a["add"]["baseRowId"] = hwm + 1
         a["add"]["defaultRowCommitVersion"] = int(version)
         hwm += int(n)
-    return hwm, {
+    return hwm, _row_id_hwm_action(hwm)
+
+
+def _row_id_hwm_action(hwm: int) -> dict:
+    """The domainMetadata action recording the row-id high-water mark."""
+    return {
         "domainMetadata": {
             "domain": _ROW_TRACKING_DOMAIN,
             "configuration": json.dumps(
@@ -3914,6 +3750,39 @@ def _assign_row_ids(
     }
 
 
+def _row_tracking_header(snap, hwm: int) -> tuple[list[dict], dict]:
+    """The enable-row-tracking commit's leading actions — commitInfo, the
+    rowTracking + domainMetadata protocol upgrade when missing, metaData
+    with the row-tracking configuration, the new high-water mark — and
+    that configuration. `snap` is a SnapshotState or a LightSnapshot."""
+    config = dict(snap.metadata.get("configuration") or {})
+    config["delta.enableRowTracking"] = "true"
+    config["delta.rowTracking.materializedRowIdColumnName"] = (
+        MATERIALIZED_ROW_ID_COL
+    )
+    config["delta.rowTracking.materializedRowCommitVersionColumnName"] = (
+        MATERIALIZED_RCV_COL
+    )
+    header: list[dict] = [
+        {
+            "commitInfo": {
+                "timestamp": int(time.time() * 1000),
+                "operation": "SET TBLPROPERTIES",
+                "operationParameters": {"delta.enableRowTracking": "true"},
+                "engineInfo": "athena_delta_lake_spark",
+            }
+        }
+    ]
+    upgrade = _protocol_upgrade_action(
+        snap.protocol, writer_features=("rowTracking", "domainMetadata")
+    )
+    if upgrade is not None:
+        header.append(upgrade)
+    header.append({"metaData": {**snap.metadata, "configuration": config}})
+    header.append(_row_id_hwm_action(hwm))
+    return header, config
+
+
 def _enable_row_tracking_light(spark, light) -> int:
     """enable_row_tracking past the light-planning threshold (round-10
     ask #4): the backfill — every live add re-committed with a fresh
@@ -3922,32 +3791,23 @@ def _enable_row_tracking_light(spark, light) -> int:
     cumulative sums + a collected O(partitions) offset map; the frame is
     persisted between the offset job and the line job so range-partition
     sampling cannot reshuffle rows between them and double-assign ids),
-    and the add lines stream into the commit through _stream_commit.
-    Ids differ from the classic replay ORDER but satisfy the same
-    contract: disjoint ranges exactly covering [0, hwm]. EVERY live file
-    gets a fresh range — matching the classic backfill, whose add dicts
-    never carry a baseRowId, so _assign_row_ids reassigns all of them;
-    keeping pre-existing ids while starting fresh ones at 0 would overlap
-    ranges and understate the high-water mark (round-10 review)."""
+    written into the frame's base_row_id/default_rcv columns, and the add
+    lines (add_action of each file) stream into the commit through
+    _stream_commit. Ids differ from the classic replay ORDER but satisfy
+    the same contract: disjoint ranges exactly covering [0, hwm]. EVERY
+    live file gets a fresh range, as in the classic backfill — keeping
+    pre-existing ids while starting fresh ones at 0 would overlap ranges
+    and understate the high-water mark (round-10 review). The header
+    (_row_tracking_header) is the classic backfill's."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    table_path = light.table_path
-    config = dict(light.metadata.get("configuration") or {})
-    if _row_tracking_enabled(config):
+    if _row_tracking_enabled(light.metadata.get("configuration")):
         return light.version
     version = light.version + 1
-    now = int(time.time() * 1000)
-    config["delta.enableRowTracking"] = "true"
-    config["delta.rowTracking.materializedRowIdColumnName"] = (
-        MATERIALIZED_ROW_ID_COL
+    l2p = logical_to_physical(
+        light.schema, light.metadata.get("configuration")
     )
-    config["delta.rowTracking.materializedRowCommitVersionColumnName"] = (
-        MATERIALIZED_RCV_COL
-    )
-    md = dict(light.metadata)
-    md["configuration"] = config
-    l2p = logical_to_physical(light.schema, config)
 
     fdf = light.files_df(spark, full=True).withColumn(
         "_n", F.get_json_object("stats", "$.numRecords").cast("long")
@@ -3958,17 +3818,8 @@ def _enable_row_tracking_light(spark, light) -> int:
             f"cannot enable row tracking: {bad[0]['path']} has no "
             "numRecords stats to size its id range"
         )
-    # size partitions like the distributed checkpoint: ~1M files each,
-    # approximated from _last_checkpoint's action count (no counting job)
-    from .log import _read_last_checkpoint
-
-    prev = _read_last_checkpoint(
-        get_fs(table_path), os.path.join(table_path, "_delta_log")
-    ) or {}
-    approx = max(1, int(prev.get("size") or 0))
-    n_parts = max(1, min(256, -(-approx // 1_000_000)))
     staged = (
-        fdf.repartitionByRange(n_parts, "path")
+        fdf.repartitionByRange(_light_part_count(light.table_path), "path")
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
@@ -3992,85 +3843,19 @@ def _enable_row_tracking_light(spark, light) -> int:
         for pid, t in per_pid:
             offsets[pid] = acc
             acc += int(t)
-        hwm = acc - 1
         off_expr = F.create_map(
             *[F.lit(x) for kv in offsets.items() for x in kv]
         )
         staged2 = staged2.withColumn(
-            "_base", off_expr[F.col("_pid")] + F.col("_excl")
-        ).withColumn("_rcv", F.lit(int(version)))
-
-        def gen(batches):
-            import json as _j
-
-            import pandas as _pd
-            from urllib.parse import quote as _q
-
-            for pdf in batches:
-                lines = []
-                for path, pv, size, mtime, stats, dvj, base, rcv in zip(
-                    pdf["path"],
-                    pdf["partition_values"],
-                    pdf["size"],
-                    pdf["modification_time"],
-                    pdf["stats"],
-                    pdf["dv_json"],
-                    pdf["_base"],
-                    pdf["_rcv"],
-                ):
-                    add = {
-                        "path": _q(path, safe="/="),
-                        "partitionValues": {
-                            (l2p or {}).get(k, k): v
-                            for k, v in (pv or {}).items()
-                        },
-                        "size": int(size),
-                        "modificationTime": int(mtime),
-                        "dataChange": False,
-                        "baseRowId": int(base),
-                        "defaultRowCommitVersion": int(rcv),
-                    }
-                    if stats:
-                        add["stats"] = stats
-                    if dvj:
-                        add["deletionVector"] = _j.loads(dvj)
-                    lines.append(
-                        _j.dumps({"add": add}, separators=(",", ":"))
-                    )
-                yield _pd.DataFrame({"line": lines})
-
-        lines_df = staged2.mapInPandas(gen, schema="line string")
-        header: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now,
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "delta.enableRowTracking": "true"
-                    },
-                    "engineInfo": "athena_delta_lake_spark",
-                }
-            }
-        ]
-        upgrade = _protocol_upgrade_action(
-            light.protocol, writer_features=("rowTracking", "domainMetadata")
+            "base_row_id", off_expr[F.col("_pid")] + F.col("_excl")
+        ).withColumn("default_rcv", F.lit(int(version)))
+        lines_df = staged2.mapInPandas(
+            _add_lines(l2p, lambda f: add_action(f, False)),
+            schema="line string",
         )
-        if upgrade is not None:
-            header.append(upgrade)
-        header.append({"metaData": md})
-        header.append(
-            {
-                "domainMetadata": {
-                    "domain": _ROW_TRACKING_DOMAIN,
-                    "configuration": json.dumps(
-                        {"rowIdHighWaterMark": hwm}, separators=(",", ":")
-                    ),
-                    "removed": False,
-                }
-            }
-        )
+        header, config = _row_tracking_header(light, acc - 1)
         v_out, _n_lines = _stream_commit(
-            table_path,
+            light.table_path,
             "SET TBLPROPERTIES",
             header,
             lines_df,
@@ -4106,93 +3891,36 @@ def enable_row_tracking(table_path: str) -> int:
 
         return _enable_row_tracking_light(SparkSession.active(), light)
     snap = log.snapshot()
-    config = dict(snap.metadata.get("configuration") or {})
-    if _row_tracking_enabled(config):
+    if _row_tracking_enabled(snap.metadata.get("configuration")):
         return snap.version
-    for f in snap.files:
-        if (f.stats or {}).get("numRecords") is None:
-            raise ValueError(
-                f"cannot enable row tracking: {f.path} has no numRecords "
-                "stats to size its id range"
-            )
-    now = int(time.time() * 1000)
     version = snap.version + 1
-    config["delta.enableRowTracking"] = "true"
-    config["delta.rowTracking.materializedRowIdColumnName"] = (
-        MATERIALIZED_ROW_ID_COL
-    )
-    config["delta.rowTracking.materializedRowCommitVersionColumnName"] = (
-        MATERIALIZED_RCV_COL
-    )
-    md = dict(snap.metadata)
-    md["configuration"] = config
-    from urllib.parse import quote
-
-    l2p = logical_to_physical(snap.schema, config)
-
-    def _phys(d):
-        if not d or not l2p:
-            return d
-        return {l2p.get(k, k): v for k, v in d.items()}
-
-    backfill = []
-    for f in snap.files:
-        stats = f.stats
-        if stats and l2p:
-            stats = {
-                **stats,
-                "minValues": _phys(stats.get("minValues")),
-                "maxValues": _phys(stats.get("maxValues")),
-                "nullCount": _phys(stats.get("nullCount")),
-            }
-        backfill.append(
-            {
-                "add": {
-                    "path": quote(f.path, safe="/="),
-                    "partitionValues": _phys(f.partition_values) or {},
-                    "size": f.size,
-                    "modificationTime": f.modification_time,
-                    "dataChange": False,
-                    **(
-                        {"stats": json.dumps(stats, separators=(",", ":"))}
-                        if stats
-                        else {}
-                    ),
-                    **(
-                        {"deletionVector": f.deletion_vector}
-                        if f.deletion_vector
-                        else {}
-                    ),
-                }
-            }
-        )
+    l2p = logical_to_physical(snap.schema, snap.metadata.get("configuration"))
     # seed ABOVE any prior enablement's high-water mark (the rowTracking
     # domain survives a property unset): files rewritten under the old
     # enablement carry MATERIALIZED old ids that win over baseRowId via
     # coalesce — fresh ranges restarting at 0 would collide with them
     # (round-10 review). Old materialized ids are mutually disjoint and
     # <= old hwm; fresh ranges above it keep table-wide id uniqueness.
-    _, domain_action = _assign_row_ids(
-        backfill, _row_id_hwm(snap.domain_metadata), version
-    )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {"delta.enableRowTracking": "true"},
-                "engineInfo": "athena_delta_lake_spark",
-            }
-        }
-    ]
-    upgrade = _protocol_upgrade_action(
-        snap.protocol, writer_features=("rowTracking", "domainMetadata")
-    )
-    if upgrade is not None:
-        actions.append(upgrade)
-    actions.append({"metaData": md})
-    actions.append(domain_action)
-    actions.extend(backfill)
+    hwm = _row_id_hwm(snap.domain_metadata)
+    backfill: list[dict] = []
+    for f in snap.files:
+        n = (f.stats or {}).get("numRecords")
+        if n is None:
+            raise ValueError(
+                f"cannot enable row tracking: {f.path} has no numRecords "
+                "stats to size its id range"
+            )
+        # every live file gets a FRESH range, replacing any range it
+        # kept from an earlier enablement
+        f = replace(
+            remap_addfile(f, l2p),
+            base_row_id=hwm + 1,
+            default_row_commit_version=version,
+        )
+        backfill.append({"add": add_action(f, False)})
+        hwm += int(n)
+    header, config = _row_tracking_header(snap, hwm)
+    actions = header + backfill
     log_dir = os.path.join(table_path, "_delta_log")
     try:
         _stamp_ict(actions, log_dir, version, config)

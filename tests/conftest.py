@@ -62,3 +62,38 @@ def force_light_engaged(path: str) -> None:
     assert DeltaLog(path).light_planning_engaged(), (
         f"light planning did not engage on {path} despite forced threshold"
     )
+
+
+def dv_source_table(spark, path: str, mapped: bool = False) -> str:
+    """A 40-row table partitioned by `part`, with deletion vectors from a
+    MOR delete and a checkpoint at its tip — the source the classic-vs-
+    light clone and row-tracking parity tests share. `mapped=True` adds
+    column mapping with a physical-name COLLISION before the delete:
+    part->bucket and score->s2 renames, then a new logical `score` whose
+    physical name is `col-<uuid>` while physical `score` belongs to
+    `s2` — so any key rename applied in the wrong direction, or twice,
+    shows up as swapped stats."""
+    from pyspark.sql import types as T
+
+    from athena_delta_lake_spark.delta import DeltaLog, DeltaTable, write_delta
+    from athena_delta_lake_spark.delta.writer import (
+        add_columns,
+        enable_column_mapping,
+        rename_column,
+        write_checkpoint,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"u{i % 3}", float(i), i % 2) for i in range(40)],
+        "id long, user string, score double, part int",
+    )
+    write_delta(df, path, partition_by=["part"])
+    if mapped:
+        enable_column_mapping(path)
+        rename_column(path, "part", "bucket")
+        rename_column(path, "score", "s2")
+        add_columns(path, T.StructType([T.StructField("score", T.LongType())]))
+    DeltaTable(spark, path).delete(where="id % 7 = 0", mode="mor")
+    write_checkpoint(path)
+    DeltaLog.clear_cache()
+    return path

@@ -171,3 +171,62 @@ def test_ids_stable_across_mor_update_and_merge(spark, tbl):
     for i, (rid, _) in before.items():
         assert after[i][0] == rid
     assert len({rid for rid, _ in after.values()}) == len(after)
+
+
+def test_enable_row_tracking_light_equals_classic(
+    spark, tmp_path, monkeypatch
+):
+    """The classic (driver loop) and light (executor-side prefix sum)
+    backfills commit the same add set — paths, physical partition keys,
+    stats, DV descriptors, dataChange false — except for the baseRowId
+    each file's range starts at, and record the same high-water mark.
+    Source: column-mapped with a physical-name collision, DVs, and a
+    checkpoint (conftest.dv_source_table)."""
+    import json
+    import os
+    import shutil
+
+    from conftest import dv_source_table
+
+    a = dv_source_table(spark, str(tmp_path / "a"), mapped=True)
+    b = str(tmp_path / "b")
+    shutil.copytree(a, b)
+    DeltaLog.clear_cache()
+    v_a = enable_row_tracking(a)
+    monkeypatch.setenv("ADLS_LIGHT_PLANNING_FILES", "1")
+    assert DeltaLog(b).light_planning_engaged()
+    v_b = enable_row_tracking(b)
+    monkeypatch.delenv("ADLS_LIGHT_PLANNING_FILES")
+    DeltaLog.clear_cache()
+    assert v_a == v_b
+
+    def _commit(path, v):
+        adds, hwm, ranges = [], None, []
+        with open(os.path.join(path, "_delta_log", f"{v:020d}.json")) as f:
+            for line in f:
+                act = json.loads(line)
+                if "add" in act:
+                    d = act["add"]
+                    ranges.append((d.pop("baseRowId"), d["stats"]))
+                    d["stats"] = json.loads(d["stats"])
+                    adds.append(d)
+                elif "domainMetadata" in act:
+                    hwm = act["domainMetadata"]["configuration"]
+        return sorted(adds, key=lambda d: d["path"]), hwm, ranges
+
+    adds_a, hwm_a, ranges_a = _commit(a, v_a)
+    adds_b, hwm_b, ranges_b = _commit(b, v_b)
+    assert len(adds_a) == len(adds_b) > 0
+    assert adds_a == adds_b
+    assert any("deletionVector" in d for d in adds_b)
+    assert all(d["defaultRowCommitVersion"] == v_a for d in adds_b)
+    assert hwm_a == hwm_b
+    # both ranges exactly tile [0, hwm]
+    hwm = json.loads(hwm_a)["rowIdHighWaterMark"]
+    for ranges in (ranges_a, ranges_b):
+        spans = sorted(
+            (base, base + json.loads(st)["numRecords"] - 1)
+            for base, st in ranges
+        )
+        assert spans[0][0] == 0 and spans[-1][1] == hwm
+        assert all(x[1] + 1 == y[0] for x, y in zip(spans, spans[1:]))
