@@ -17,8 +17,14 @@ them:
    - `add` with dataChange=true in commit v  -> its rows were INSERTED at v
    - `remove` with dataChange=true at v      -> its rows were DELETED at v
    - same-path remove+add with a changed deletion vector -> exactly the
-     newly-DV'd rows were DELETED (merge-on-read DML)
+     newly-DV'd rows were DELETED (merge-on-read DML), and rows a shrunk
+     DV un-deletes were INSERTED (RESTORE)
    - OPTIMIZE/compaction commits (dataChange=false) produce NO changes.
+
+`_RangeTracker.change_sets` derives each commit's change set once (the
+cdc files, the DV-diff pairs, the inserted and deleted files, each in its
+era's logical names); `table_changes` and the streaming source
+(sources/deltapond_source.py) only turn it into rows.
 
 Scale: the whole derivation is DRIVER-LIGHT (round-10 ask #1 — the
 previous shape paid a CLASSIC snapshot per commit-with-adds, an 8.6 GiB
@@ -38,6 +44,7 @@ analogue) instead of surfacing an opaque scan failure."""
 from __future__ import annotations
 
 import copy
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +58,8 @@ from .log import (
     _decode_path,
     _ReplayAccumulator,
     addfile_from_action,
+    fold_commit,
+    remap_addfile,
 )
 from .reader import read_files
 from .types import logical_to_physical, physical_to_logical
@@ -144,28 +153,23 @@ class _HeaderTracker:
         )
 
 
-def _rekey_entry(f: AddFile, key_map: dict[str, str] | None) -> AddFile:
-    """Remap an AddFile's partition-value KEYS through `key_map`
-    (physical<->logical on column-mapped tables; None = identity). The
-    tracker stores entries in the log's own PHYSICAL form — a file added
-    before a mid-range RENAME COLUMN and read after it must resolve
-    partition values by the era it is READ in, exactly as the classic
-    per-version snapshot remap did. Stats keys are left untouched: no CDF
-    read path consumes them."""
-    if not key_map or not f.partition_values:
-        return f
-    return AddFile(
-        path=f.path,
-        partition_values={
-            key_map.get(k, k): v for k, v in f.partition_values.items()
-        },
-        size=f.size,
-        modification_time=f.modification_time,
-        stats_raw=f.stats_raw,
-        deletion_vector=f.deletion_vector,
-        base_row_id=f.base_row_id,
-        default_row_commit_version=f.default_row_commit_version,
-    )
+@dataclass
+class _ChangeSet:
+    """One commit's changes as _RangeTracker.change_sets derives them.
+    Every file is in its era's LOGICAL names (remap_addfile): `cdc` and
+    `inserted` and the second entry of a DV pair in the commit's own
+    era, `deleted` and the first entry of a pair in the era before it.
+    A commit with cdc files is described by them alone, so its other
+    lists are empty."""
+
+    version: int
+    pre: "_HeaderTracker"  # header at version - 1
+    post: "_HeaderTracker"  # header at version
+    cdc: list = field(default_factory=list)  # change data files
+    # same-path (entry at v-1, entry at v) whose deletion vector changed
+    dv_pairs: list = field(default_factory=list)
+    inserted: list = field(default_factory=list)
+    deleted: list = field(default_factory=list)
 
 
 class _RangeTracker:
@@ -187,6 +191,7 @@ class _RangeTracker:
         spark: SparkSession | None = None,
     ):
         self.log = log
+        self.start, self.end = start, end
         self.actions: dict[int, list[dict]] = {
             v: [a for a in log.commit_actions(v) if "commitInfo" not in a]
             for v in range(start, end + 1)
@@ -206,11 +211,12 @@ class _RangeTracker:
             except ValueError:
                 # start-1 predates the earliest checkpoint (TRUNCATE
                 # HISTORY / log retention cleanup). Seed from the earliest
-                # checkpointed version INSIDE the range instead: re-folding
-                # commits at or below it is idempotent (last-writer-wins,
-                # same order as replay), and versions at or below it raise
-                # lazily IF their derivation needs pre-state — exactly when
-                # the classic per-version snapshot(v-1) raised.
+                # checkpointed version INSIDE the range instead: folding
+                # the commits up to it again ends at its own state (each
+                # touched path takes its last action, as in replay), and
+                # versions at or below it raise lazily IF their derivation
+                # needs pre-state — exactly when the classic per-version
+                # snapshot(v-1) raised.
                 c = self._earliest_checkpoint_in(log, start, end)
                 if c is None:
                     raise
@@ -263,30 +269,99 @@ class _RangeTracker:
                 # collect_pruned_add_files hands back LOGICAL-keyed
                 # entries (base era); canonicalize to the log's physical
                 # form the per-commit adds arrive in
-                self.state = {f.path: _rekey_entry(f, l2p) for f in adds}
+                self.state = {f.path: remap_addfile(f, l2p) for f in adds}
             return
         snap = log.snapshot(base_v)  # sub-threshold: cached, one replay
         self.header = _HeaderTracker.from_snapshot(snap)
         l2p = self.header.l2p()
         self.state = {
-            f.path: _rekey_entry(f, l2p)
+            f.path: remap_addfile(f, l2p)
             for f in snap.files
             if f.path in watched
         }
 
     def fold(self, v: int) -> None:
-        """Advance header + live-file state past commit v — ALL adds and
-        removes count (an OPTIMIZE's dataChange=false rewrites still move
-        files), in action order (same-commit add-then-remove nets out,
-        remove-then-re-add survives — last-writer-wins like replay)."""
-        for a in self.actions[v]:
-            if "add" in a:
-                f = addfile_from_action(a["add"])
-                self.state[f.path] = f
-            elif "remove" in a:
-                self.state.pop(_decode_path(a["remove"]["path"]), None)
-            else:
-                self.header.apply(a)
+        """Advance header + live-file state past commit v through
+        log.fold_commit — ALL adds and removes count (an OPTIMIZE's
+        dataChange=false rewrites still move files)."""
+        acts = self.actions[v]
+        for a in acts:
+            self.header.apply(a)
+        fold_commit(self.state, acts)
+
+    def change_sets(self):
+        """Yield each commit's _ChangeSet, start to end, folding the
+        tracker past it. dataChange adds are inserts and dataChange
+        removes are deletes, except on a path the commit both adds and
+        removes (or re-adds while live — RESTORE on tables written before
+        it paired a remove): that is one file whose deletion vector may
+        have changed, a DV-diff pair, never a whole-file delete+insert.
+
+        A version at or below a FALLBACK base (seeded past a truncated
+        history) has no derivable pre-state: it raises exactly when the
+        classic path's snapshot(v-1) / snapshot(v) would have. A
+        cdc-bearing commit AT the base itself is fine — the spec ignores
+        its add/remove actions for change derivation and the cdc read
+        needs only the base-era header the seed provides (round-10
+        review: it also carries dataChange adds/removes, so testing those
+        alone falsely refused a derivable commit)."""
+        for v in range(self.start, self.end + 1):
+            actions = self.actions[v]
+            cdc = [a["cdc"] for a in actions if "cdc" in a]
+            added = {
+                _decode_path(a["add"]["path"])
+                for a in actions
+                if "add" in a and a["add"].get("dataChange", True)
+            }
+            removed = {
+                _decode_path(a["remove"]["path"])
+                for a in actions
+                if "remove" in a and a["remove"].get("dataChange", True)
+            }
+            if 0 < v <= self.base_version and (
+                (not cdc and (added or removed))
+                or (cdc and v < self.base_version)
+            ):
+                raise ValueError(
+                    f"version {v - 1} of {self.log.table_path} is no longer "
+                    "replayable: its commit JSONs predate the earliest "
+                    "checkpoint (expired by log retention cleanup)"
+                )
+            pre = self.header.freeze()
+            # version 0 has no prior state, whatever a fallback seed holds
+            before = {
+                p: self.state[p]
+                for p in (added | removed)
+                if v > 0 and p in self.state
+            }
+            self.fold(v)
+            cs = _ChangeSet(v, pre, self.header.freeze())
+            if cdc:
+                p2l = cs.post.p2l()
+                cs.cdc = [remap_addfile(addfile_from_action(a), p2l) for a in cdc]
+                yield cs
+                continue
+            pre_p2l, post_p2l = pre.p2l(), cs.post.p2l()
+            common = added & (removed | set(before))
+            cs.dv_pairs = [
+                (
+                    remap_addfile(before[p], pre_p2l),
+                    remap_addfile(self.state[p], post_p2l),
+                )
+                for p in sorted(common)
+                if p in before
+                and self.state[p].deletion_vector != before[p].deletion_vector
+            ]
+            cs.inserted = [
+                remap_addfile(self.state[p], post_p2l)
+                for p in sorted(added - common)
+            ]
+            cs.deleted = [
+                remap_addfile(before[p], pre_p2l)
+                for p in sorted(removed - common)
+                if p in before  # unknown to the prior state: no row
+            ]
+            yield cs
 
 
 def table_changes(
@@ -316,138 +391,46 @@ def table_changes(
     # into a separate NULL-filled column (found by the round-6 DML fuzz:
     # RESTORE across a rename boundary over-deleted in the change feed).
     pieces: list[tuple[DataFrame, list]] = []
-    for v in range(starting_version, end + 1):
-        actions = tracker.actions[v]
-        cdc_actions = [a["cdc"] for a in actions if "cdc" in a]
-        # path sets only — inserts and DV diffs read from the tracker's
-        # pre/post entries, so retaining full add-action dicts per commit
-        # here would be wasted memory on wide commits
-        add_paths: set[str] = set()
-        remove_paths: set[str] = set()
-        for a in actions:
-            if "add" in a and a["add"].get("dataChange", True):
-                add_paths.add(_decode_path(a["add"]["path"]))
-            elif "remove" in a and a["remove"].get("dataChange", True):
-                remove_paths.add(_decode_path(a["remove"]["path"]))
-        # versions at or below a FALLBACK base (seeded past a truncated
-        # history) have no derivable pre-state: raise exactly when the
-        # classic path's snapshot(v-1) / snapshot(v) would have. A
-        # cdc-bearing commit AT the base itself is fine — the spec ignores
-        # its add/remove actions for change derivation and the cdc read
-        # needs only the base-era header the seed provides (round-10
-        # review: it also carries dataChange adds/removes, so testing
-        # those alone falsely refused a derivable commit).
-        if 0 < v <= tracker.base_version and (
-            (not cdc_actions and (add_paths or remove_paths))
-            or (cdc_actions and v < tracker.base_version)
-        ):
-            raise ValueError(
-                f"version {v - 1} of {table_path} is no longer replayable: "
-                "its commit JSONs predate the earliest checkpoint (expired "
-                "by log retention cleanup)"
+
+    def _piece(df, change_type, v, era: _HeaderTracker, era_v: int):
+        if change_type is not None:
+            df = df.withColumn("_change_type", F.lit(change_type))
+        pieces.append(
+            (
+                df.withColumn("_commit_version", F.lit(v)),
+                era.require_schema(era_v).fields,
             )
-        # pre-commit era: header + the touched paths' live entries at v-1
-        pre_header = tracker.header.freeze()
-        pre_entries = {
-            p: tracker.state[p]
-            for p in (add_paths | remove_paths)
-            if p in tracker.state
-        }
-        tracker.fold(v)
-        post_header = tracker.header.freeze()
-        if cdc_actions:
+        )
+
+    for cs in tracker.change_sets():
+        v = cs.version
+        if cs.cdc:
             # spec: a commit WITH cdc actions is described by them ALONE
-            # (the fold above still advanced the file state — its
-            # add/remove actions change TABLE state, just not the feed)
             piece = _read_cdc_files(
-                spark, log, v, cdc_actions, post_header.snapshot_state(v, [])
+                spark, log, v, cs.cdc, cs.post.snapshot_state(v, [])
             )
             if piece is not None:
-                pieces.append(
-                    (
-                        piece.withColumn("_commit_version", F.lit(v)),
-                        post_header.require_schema(v).fields,
-                    )
-                )
-            continue
-        post_entries = {
-            p: tracker.state[p] for p in add_paths if p in tracker.state
-        }
-        # merge-on-read commits remove+re-add the SAME path with a changed
-        # deletion vector: the true change set is the newly-DV'd rows only
-        # (emitting whole-file delete+insert would be wrong granularity).
-        # A bare re-add of an ALREADY-LIVE path (RESTORE dropping a DV —
-        # last-writer-wins replay replaces the entry without a remove) is
-        # the same case: diff the DVs, never re-insert the whole file.
-        common = add_paths & (remove_paths | set(pre_entries))
-        if common and v > 0:
-            pairs = [
-                (p, pre_entries.get(p), post_entries.get(p))
-                for p in sorted(common)
-            ]
-            dv_piece = _dv_diff_rows(
-                spark, log, v, pairs, pre_header, post_header
-            )
+                _piece(piece, None, v, cs.post, v)
+        if cs.dv_pairs:
+            dv_piece = _dv_diff_rows(spark, log, v, cs.dv_pairs, cs.pre, cs.post)
             if dv_piece is not None:
-                pieces.append(
-                    (
-                        dv_piece.withColumn("_change_type", F.lit("delete"))
-                        .withColumn("_commit_version", F.lit(v)),
-                        pre_header.require_schema(v - 1).fields,
-                    )
-                )
+                _piece(dv_piece, "delete", v, cs.pre, v - 1)
             # a SHRINKING deletion vector (RESTORE rolling a MOR delete
             # back) RESURRECTS rows: old-DV minus new-DV positions are
             # inserts, readable from the new snapshot where they are live
             res_piece = _dv_diff_rows(
-                spark, log, v, pairs, pre_header, post_header, resurrect=True
+                spark, log, v, cs.dv_pairs, cs.pre, cs.post, resurrect=True
             )
             if res_piece is not None:
-                pieces.append(
-                    (
-                        res_piece.withColumn("_change_type", F.lit("insert"))
-                        .withColumn("_commit_version", F.lit(v)),
-                        post_header.require_schema(v).fields,
-                    )
-                )
-            add_paths -= common
-            remove_paths -= common
-        if add_paths:
-            p2l = post_header.p2l()
-            files = [
-                _rekey_entry(post_entries[p], p2l)
-                for p in sorted(add_paths)
-                if p in post_entries  # added-and-removed in-commit: no row
-            ]
-            if files:
-                _require_present(log, v, [f.path for f in files])
-                snap = post_header.snapshot_state(v, files)
-                pieces.append(
-                    (
-                        read_files(spark, snap, files)
-                        .withColumn("_change_type", F.lit("insert"))
-                        .withColumn("_commit_version", F.lit(v)),
-                        post_header.require_schema(v).fields,
-                    )
-                )
-        if remove_paths and v > 0:
-            p2l = pre_header.p2l()
-            files = [
-                _rekey_entry(pre_entries[p], p2l)
-                for p in sorted(remove_paths)
-                if p in pre_entries  # unknown to the prior state: no row
-            ]
-            if files:
-                _require_present(log, v, [f.path for f in files])
-                prev = pre_header.snapshot_state(v - 1, files)
-                pieces.append(
-                    (
-                        read_files(spark, prev, files)
-                        .withColumn("_change_type", F.lit("delete"))
-                        .withColumn("_commit_version", F.lit(v)),
-                        pre_header.require_schema(v - 1).fields,
-                    )
-                )
+                _piece(res_piece, "insert", v, cs.post, v)
+        if cs.inserted:
+            _require_present(log, v, [f.path for f in cs.inserted])
+            snap = cs.post.snapshot_state(v, cs.inserted)
+            _piece(read_files(spark, snap, cs.inserted), "insert", v, cs.post, v)
+        if cs.deleted:
+            _require_present(log, v, [f.path for f in cs.deleted])
+            prev = cs.pre.snapshot_state(v - 1, cs.deleted)
+            _piece(read_files(spark, prev, cs.deleted), "delete", v, cs.pre, v - 1)
     end_fields = tracker.header.require_schema(end).fields
     if not pieces:
         schema = tracker.header.require_schema(end)
@@ -554,15 +537,16 @@ def _read_cdc_files(
     spark: SparkSession,
     log: DeltaLog,
     v: int,
-    cdc_actions: list[dict],
+    cdc_files: list[AddFile],
     snap: SnapshotState,
 ) -> DataFrame | None:
     """Read a commit's Change Data Files: stored `_change_type` column +
     data columns (PHYSICAL names under column mapping), partition columns
-    injected from each action's partitionValues — the same conventions as
-    data files (spec: Change Data Files). `snap` is a header-only
-    SnapshotState at v (schema/partition columns/config — no file list),
-    built by the range tracker so this path never replays a snapshot."""
+    injected from each file's (logical) partition values — the same
+    conventions as data files (spec: Change Data Files). `snap` is a
+    header-only SnapshotState at v (schema/partition columns/config — no
+    file list), built by the range tracker so this path never replays a
+    snapshot."""
     from .log import _join
     from .types import cast_partition_value
 
@@ -579,28 +563,21 @@ def _read_cdc_files(
             )
             for f in data_fields
         ]
-        p2l_part = {p: n for n, p in l2p.items()}
     else:
         read_fields = list(data_fields)
-        p2l_part = {f.name: f.name for f in schema.fields}
     read_schema = T.StructType(
         read_fields + [T.StructField("_change_type", T.StringType(), True)]
     )
     type_by_name = {f.name: f.dataType for f in schema.fields}
 
-    _require_present(log, v, [_decode_path(a["path"]) for a in cdc_actions])
+    _require_present(log, v, [f.path for f in cdc_files])
     by_part: dict[tuple, list[str]] = {}
-    for a in cdc_actions:
-        pv_raw = a.get("partitionValues") or {}
-        if isinstance(pv_raw, list):  # pyarrow map shape
-            pv_raw = dict(pv_raw)
-        pv = {p2l_part.get(k, k): val for k, val in pv_raw.items()}
+    for f in cdc_files:
         key = tuple(
-            cast_partition_value(pv.get(c), type_by_name[c]) for c in part_cols
+            cast_partition_value(f.partition_values.get(c), type_by_name[c])
+            for c in part_cols
         )
-        by_part.setdefault(key, []).append(
-            _join(log.table_path, _decode_path(a["path"]))
-        )
+        by_part.setdefault(key, []).append(_join(log.table_path, f.path))
     pieces = []
     for pvals, paths in by_part.items():
         piece = spark.read.schema(read_schema).parquet(*paths)
@@ -627,15 +604,15 @@ def _dv_diff_rows(
     spark: SparkSession,
     log: DeltaLog,
     v: int,
-    pairs: list[tuple[str, AddFile | None, AddFile | None]],
+    pairs: list[tuple[AddFile, AddFile]],
     pre_header: _HeaderTracker,
     post_header: _HeaderTracker,
     resurrect: bool = False,
 ) -> DataFrame | None:
     """Rows whose deletion-vector membership CHANGED in commit v for
     same-path remove+add pairs, keyed by (file, row_index). `pairs` holds
-    (path, live entry at v-1, live entry at v) straight from the range
-    tracker — no snapshot lookups.
+    (live entry at v-1, live entry at v), each in its era's names,
+    straight from the commit's _ChangeSet — no snapshot lookups.
 
     Default (deletes): positions in the new DV minus the old one — rows a
     merge-on-read DML newly deleted — read from the PREVIOUS era, whose
@@ -648,23 +625,17 @@ def _dv_diff_rows(
     task per file batch, mirroring reader._deleted_positions_df and the DV
     write path dml.py `_build_dvs`), so `table_changes` over a third-party
     MOR table with 10^8 newly-DV'd rows never materializes a row-index
-    list on the driver. Driver-side work is O(candidate files): a
-    descriptor-equality prefilter skips files whose DV did not change."""
+    list on the driver. Driver-side work is O(candidate files)."""
     import json as _json
 
     from .reader import _join_path, _strip_scheme, read_files_with_index
 
     era = post_header if resurrect else pre_header
-    key_map = era.p2l()
 
     desc_rows: list[tuple[str, str, str]] = []
     read_targets = []
-    for p, pf, nf in pairs:
-        if pf is None or nf is None:
-            continue
+    for pf, nf in pairs:
         od, nd = pf.deletion_vector, nf.deletion_vector
-        if od == nd:
-            continue  # identical descriptor -> identical bitmap -> no diff
         # set-difference direction makes one side provably empty without
         # touching any bitmap: old - new needs old nonempty, new - old
         # needs new nonempty
@@ -672,7 +643,7 @@ def _dv_diff_rows(
             continue
         if not resurrect and nd is None:
             continue
-        full = _join_path(log.table_path, p)
+        full = _join_path(log.table_path, pf.path)
         if "://" not in full:
             import os as _os
 
@@ -684,7 +655,7 @@ def _dv_diff_rows(
                 _json.dumps(nd) if nd else "null",
             )
         )
-        read_targets.append(_rekey_entry(nf if resurrect else pf, key_map))
+        read_targets.append(nf if resurrect else pf)
     if not desc_rows:
         return None
     # missing read targets (VACUUMed): only an error if this DIRECTION

@@ -34,7 +34,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fs import get_fs, normalize_table_path
-from .log import AddFile, DeltaLog, SnapshotState, add_action, remap_addfile
+from .log import (
+    AddFile,
+    DeltaLog,
+    SnapshotState,
+    add_action,
+    dv_unique_id,
+    remap_addfile,
+)
 from .reader import read_files
 from .stats import Predicate, prune_files_auto
 from .types import logical_to_physical
@@ -279,9 +286,8 @@ def delete(
             table_path,
             "DELETE",
             [],
-            [f.path for f in candidates],
+            candidates,
             operation_parameters={"predicate": str(where)},
-            expected_states={f.path: file_fingerprint(f) for f in candidates},
             base_version=snap.version,
             isolation=isolation,
             read_predicates=preds or None,
@@ -319,10 +325,9 @@ def delete(
         table_path,
         "DELETE",
         adds,
-        [f.path for f in candidates],
+        candidates,
         operation_parameters={"predicate": str(where)},
         extra_actions=cdc,
-        expected_states={f.path: file_fingerprint(f) for f in candidates},
         base_version=snap.version,
         isolation=isolation,
         read_predicates=preds or None,
@@ -396,14 +401,11 @@ def delete_mor(
             table_path,
             "DELETE",
             pieces.adds,
-            [f.path for f, _idx in pieces.touched],
+            [f for f, _idx in pieces.touched],
             operation_parameters={"predicate": str(where), "mode": "merge-on-read"},
             extra_actions=extra or None,
             isolation=isolation,
             read_predicates=preds or None,
-            expected_states={
-                f.path: file_fingerprint(f) for f, _idx in pieces.touched
-            },
             base_version=snap.version,
             operation_metrics={
                 "numRemovedFiles": len(pieces.full_files),
@@ -679,10 +681,9 @@ def update(
         table_path,
         "UPDATE",
         adds,
-        [f.path for f in candidates],
+        candidates,
         operation_parameters={"predicate": str(where)},
         extra_actions=cdc,
-        expected_states={f.path: file_fingerprint(f) for f in candidates},
         base_version=snap.version,
         isolation=isolation,
         read_predicates=preds or None,
@@ -782,14 +783,11 @@ def update_mor(
             table_path,
             "UPDATE",
             pieces.adds + new_adds,
-            [f.path for f, _idx in pieces.touched],
+            [f for f, _idx in pieces.touched],
             operation_parameters={"predicate": str(where), "mode": "merge-on-read"},
             extra_actions=extra or None,
             isolation=isolation,
             read_predicates=preds or None,
-            expected_states={
-                f.path: file_fingerprint(f) for f, _idx in pieces.touched
-            },
             base_version=snap.version,
             operation_metrics={
                 "numRemovedFiles": len(pieces.full_files),
@@ -2204,13 +2202,12 @@ def merge_upsert(
             table_path,
             "MERGE",
             adds,
-            [f.path for f in remove_files],
+            remove_files,
             operation_parameters={
                 "matchedPredicate": " AND ".join(keys)
                 + (f" AND {on_condition}" if on_condition else "")
             },
             extra_actions=md_actions + (cdc or []) or None,
-            expected_states={f.path: file_fingerprint(f) for f in remove_files},
             base_version=snap.version,
             isolation=isolation,
             read_predicates=None,
@@ -2709,13 +2706,12 @@ def merge_upsert_mor(
             table_path,
             "MERGE",
             dv_adds + new_adds,
-            [f.path for f in removes],
+            removes,
             operation_parameters={
                 "matchedPredicate": " AND ".join(keys),
                 "mode": "merge-on-read",
             },
             extra_actions=extra,
-            expected_states={f.path: file_fingerprint(f) for f in removes},
             base_version=snap.version,
             isolation=isolation,
             read_predicates=None,
@@ -2860,14 +2856,13 @@ def compact(
         table_path,
         operation,
         adds,
-        [f.path for f in victims],
+        victims,
         data_change=False,
         operation_parameters=(
             operation_parameters
             if operation_parameters is not None
             else {"targetSize": str(target_file_size)}
         ),
-        expected_states={f.path: file_fingerprint(f) for f in victims},
         base_version=snap.version,
     )
     return {
@@ -2922,8 +2917,7 @@ def _light_restore_plan(log, version):
     the two frames rather than one cached full-outer join: caching a
     10^7-row join to save one scan would reintroduce exactly the memory
     footprint this path exists to avoid. Returns (target_hdr,
-    current_hdr, to_add AddFiles, to_remove paths, expected_states,
-    tgt_has_dv)."""
+    current_hdr, to_add AddFiles, to_remove AddFiles, tgt_has_dv)."""
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -2937,15 +2931,19 @@ def _light_restore_plan(log, version):
     spark = SparkSession.active()
     cap = light_collect_cap()
     tdf = lt.files_df(spark, full=True)
-    cur_fp = lc.files_df(spark, full=True).select(
+    cur = lc.files_df(spark, full=True)
+
+    def _dv(key, cast=None):
+        c = F.get_json_object("dv_json", f"$.{key}")
+        return c.cast(cast) if cast else c
+
+    cur_fp = cur.select(
         F.col("path").alias("c_path"),
         F.col("size").alias("c_size"),
         F.col("modification_time").alias("c_mtime"),
-        F.get_json_object("dv_json", "$.pathOrInlineDv").alias("c_dv_path"),
-        F.get_json_object("dv_json", "$.offset").cast("long").alias("c_dv_off"),
-        F.get_json_object("dv_json", "$.cardinality")
-        .cast("long")
-        .alias("c_dv_card"),
+        _dv("pathOrInlineDv").alias("c_dv_path"),
+        _dv("offset", "long").alias("c_dv_off"),
+        _dv("cardinality", "long").alias("c_dv_card"),
     )
     # re-adds: target files absent from current OR with a different
     # fingerprint (same path, grown DV / rewritten bytes) — null-safe on
@@ -2960,45 +2958,32 @@ def _light_restore_plan(log, version):
         F.col("c_path").isNotNull()
         & F.col("size").eqNullSafe(F.col("c_size"))
         & F.col("modification_time").eqNullSafe(F.col("c_mtime"))
-        & F.col("c_dv_path").eqNullSafe(
-            F.get_json_object("dv_json", "$.pathOrInlineDv")
-        )
-        & F.col("c_dv_off").eqNullSafe(
-            F.get_json_object("dv_json", "$.offset").cast("long")
-        )
-        & F.col("c_dv_card").eqNullSafe(
-            F.get_json_object("dv_json", "$.cardinality").cast("long")
-        )
+        & F.col("c_dv_path").eqNullSafe(_dv("pathOrInlineDv"))
+        & F.col("c_dv_off").eqNullSafe(_dv("offset", "long"))
+        & F.col("c_dv_card").eqNullSafe(_dv("cardinality", "long"))
     )
     diff_df = joined.where(~same).select(*[F.col(c) for c in tdf.columns])
     to_add = lt.collect_pruned_add_files(spark, full_df=diff_df, cap=cap)
     if to_add is None:
         return None
-    # removes: current paths with no target counterpart — the collected
-    # fingerprint columns ARE the expected_states commit_rewrite verifies
-    rem_rows = (
-        cur_fp.join(
-            tdf.select(F.col("path").alias("t_path")),
-            F.col("c_path") == F.col("t_path"),
-            "left_anti",
-        )
-        .limit(cap + 1)
-        .collect()
+    # removes: the current entry of every path the target lacks or
+    # re-adds under another deletion vector (DV uniqueId: storage type,
+    # path or inline bitmap, offset)
+    t_dv = tdf.select(
+        F.col("path").alias("t_path"),
+        *[_dv(k).alias(f"t_{k}") for k in ("storageType", "pathOrInlineDv", "offset")],
     )
-    if len(rem_rows) > cap:
+    same_dv = F.lit(True)
+    for k in ("storageType", "pathOrInlineDv", "offset"):
+        same_dv = same_dv & _dv(k).eqNullSafe(F.col(f"t_{k}"))
+    rem_df = (
+        cur.join(t_dv, cur["path"] == t_dv["t_path"], "left")
+        .where(F.col("t_path").isNull() | ~same_dv)
+        .select(*[F.col(c) for c in cur.columns])
+    )
+    to_remove = lc.collect_pruned_add_files(spark, full_df=rem_df, cap=cap)
+    if to_remove is None:
         return None
-    to_remove = sorted(r["c_path"] for r in rem_rows)
-    expected_states = {
-        r["c_path"]: (
-            r["c_path"],
-            r["c_size"],
-            r["c_mtime"],
-            r["c_dv_path"],
-            r["c_dv_off"],
-            r["c_dv_card"],
-        )
-        for r in rem_rows
-    }
     # the DV probe's only consumer is the protocol-upgrade check, which
     # discards the answer whenever the feature is already declared — the
     # common case; only pay the scan when it could change the commit
@@ -3013,7 +2998,6 @@ def _light_restore_plan(log, version):
         lc.to_snapshot_state([]),
         to_add,
         to_remove,
-        expected_states,
         tgt_has_dv,
     )
 
@@ -3024,17 +3008,15 @@ def restore_table(
     timestamp_millis: int | None = None,
 ) -> dict:
     """RESTORE the table to an earlier version (or timestamp) as a NEW
-    commit: re-`add` files live then but not now, `remove` files live now
-    but not then, and reinstate that version's metaData if it changed.
+    commit: re-`add` files live then but not now (or live now in another
+    state), `remove` files live now but not then, and reinstate that
+    version's metaData if it changed.
 
     Metadata-only — no data file is read, copied, or deleted (the old
     files still exist unless VACUUMed; restore fails fast listing any
     that are gone). History is preserved: the restore itself is just
     another version, so it can in turn be restored away.
     """
-    import json as _json
-    from urllib.parse import quote
-
     if (version is None) == (timestamp_millis is None):
         raise ValueError("provide exactly one of version / timestamp_millis")
     table_path = normalize_table_path(table_path)
@@ -3046,24 +3028,30 @@ def restore_table(
     # still differ (a deletion vector grown by a later MOR delete, or a
     # same-path rewrite) — those must be re-added with the TARGET's
     # descriptor or post-target deletions survive the restore (caught by
-    # the randomized DML fuzz). Re-adding an existing path replaces its
-    # entry on replay (last writer wins), so no paired remove is needed.
+    # the randomized DML fuzz). A re-add under another deletion vector
+    # also removes the current entry: the protocol keys a file by
+    # (path, DV uniqueId), and a bare re-add would leave both entries
+    # live for a reader that keys files that way.
     plan = _light_restore_plan(log, version)
     if plan is not None:
-        target, current, to_add, to_remove, expected_states, tgt_has_dv = plan
+        target, current, to_add, to_remove, tgt_has_dv = plan
     else:
         target = log.snapshot(version)
         current = log.snapshot()
-        cur_fp = {f.path: file_fingerprint(f) for f in current.files}
+        cur = {f.path: f for f in current.files}
         tgt = {f.path: f for f in target.files}
         to_add = [
-            f for p, f in tgt.items() if cur_fp.get(p) != file_fingerprint(f)
+            f
+            for p, f in tgt.items()
+            if p not in cur or file_fingerprint(cur[p]) != file_fingerprint(f)
         ]
-        to_remove = sorted(p for p in cur_fp if p not in tgt)
-        cur_by = {f.path: f for f in current.files}
-        expected_states = {
-            p: file_fingerprint(cur_by[p]) for p in to_remove
-        }
+        to_remove = [
+            f
+            for p, f in cur.items()
+            if p not in tgt
+            or dv_unique_id(f.deletion_vector)
+            != dv_unique_id(tgt[p].deletion_vector)
+        ]
         tgt_has_dv = None  # classic passes target.files to the feature scan
 
     # through the fs facade — os.path.exists on a URI table path
@@ -3163,10 +3151,9 @@ def restore_table(
         table_path,
         "RESTORE",
         adds,
-        to_remove,
+        sorted(to_remove, key=lambda f: f.path),
         operation_parameters={"version": str(target.version)},
         extra_actions=extra,
-        expected_states=expected_states,
         base_version=current.version,
         ict_config=ict_config,
     )
@@ -3769,9 +3756,8 @@ def truncate_table(table_path: str) -> dict:
         table_path,
         "TRUNCATE",
         [],
-        [f.path for f in snap.files],
+        snap.files,
         data_change=True,
-        expected_states={f.path: file_fingerprint(f) for f in snap.files},
         base_version=snap.version,
     )
     return {"files_removed": len(snap.files)}

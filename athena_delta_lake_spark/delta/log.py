@@ -294,6 +294,35 @@ def add_action(f: AddFile, data_change: bool) -> dict:
     return add
 
 
+def remove_action(f: AddFile, data_change: bool, ts: int) -> dict:
+    """The `remove` body retiring the live entry `f` — the one remove
+    encoder, next to add_action. It names the entry by its protocol
+    identity, the path plus the deletion vector it carries, so a reader
+    that keys files by (path, DV uniqueId) retires exactly that entry.
+    partitionValues, size and extendedFileMetadata are optional in the
+    protocol and no reader here uses them; leaving them out keeps
+    copy-on-write removes to path, deletionTimestamp and dataChange."""
+    rem = {
+        "path": _quote(f.path, safe="/="),
+        "deletionTimestamp": ts,
+        "dataChange": data_change,
+    }
+    if f.deletion_vector:
+        rem["deletionVector"] = f.deletion_vector
+    return rem
+
+
+def dv_unique_id(dv: dict | None) -> str | None:
+    """A deletion vector's uniqueId as the protocol defines it:
+    storageType + pathOrInlineDv, with '@offset' appended when the DV
+    has an offset. None for a file without a DV."""
+    if not dv:
+        return None
+    uid = f"{dv.get('storageType')}{dv.get('pathOrInlineDv')}"
+    off = dv.get("offset")
+    return uid if off is None else f"{uid}@{off}"
+
+
 @dataclass
 class LightSnapshot:
     """DRIVER-LIGHT snapshot for the 10^7+ file regime (round-7 ask #6),
@@ -599,23 +628,26 @@ class _Replay:
     header fields both snapshot shapes share, the replayed adds (every
     live file, or only the tail overlay for a header-only replay) in
     LOGICAL names, their original stats text (header-only replays only),
-    the paths removed along the way, and the checkpoint files folded."""
+    the remove tombstones of the tail (header-only replays only), and
+    the checkpoint files folded."""
 
     header: dict
     adds: list
     raw_stats: list | None
-    removed: set
+    removed: dict | None
     checkpoint_paths: list
 
 
 @dataclass
 class _ReplayAccumulator:
-    """Last-writer-wins replay state; actions applied in commit order."""
+    """Replay state: commits folded in version order, each through
+    fold_commit. `removed` collects the remove tombstones when a caller
+    needs them (the header-only replay's dead paths)."""
 
     metadata: dict | None = None
     protocol: dict | None = None
     adds: dict[str, AddFile] = field(default_factory=dict)
-    removed: set[str] = field(default_factory=set)
+    removed: dict | None = None
     txns: dict = field(default_factory=dict)
     domains: dict = field(default_factory=dict)
 
@@ -763,14 +795,6 @@ def _apply_action(acc: _ReplayAccumulator, action: dict) -> None:
         acc.protocol = {
             k: v for k, v in action["protocol"].items() if v is not None
         }
-    elif "add" in action:
-        f = addfile_from_action(action["add"])
-        acc.removed.discard(f.path)
-        acc.adds[f.path] = f
-    elif "remove" in action:
-        path = _decode_path(action["remove"]["path"])
-        acc.adds.pop(path, None)
-        acc.removed.add(path)
     elif "txn" in action:
         t = action["txn"]
         if t.get("appId") is not None and t.get("version") is not None:
@@ -784,7 +808,46 @@ def _apply_action(acc: _ReplayAccumulator, action: dict) -> None:
             acc.domains.pop(dm["domain"], None)
         else:
             acc.domains[dm["domain"]] = dm.get("configuration")
-    # commitInfo / cdc are no-ops for snapshot state
+    # add / remove go through fold_commit; commitInfo / cdc are no-ops
+    # for snapshot state
+
+
+def fold_commit(
+    live: dict, actions, removed: dict | None = None, decode=addfile_from_action
+) -> None:
+    """THE commit fold behind every add/remove walker (snapshot replay,
+    the CDF range tracker, log compaction, both commit-conflict walks):
+    apply one commit's file actions to `live` (path -> decode(add body)),
+    every remove before any add, whatever their order in the commit.
+    The protocol allows at most one action per (path, DV uniqueId) in a
+    version, so a remove and an add of one path in one commit always
+    mean "replace": remove(p, dv1) + add(p, dv2) as merge-on-read DML
+    and RESTORE commit it, in either order. `live` stays keyed by path
+    alone: tables written before removes carried their DV hold
+    remove(p) with no DV next to add(p, dv2), and a (path, DV) key
+    would keep both entries. `removed`, when given, collects each
+    remove body keyed by (path, DV uniqueId). Other actions are
+    ignored."""
+    adds = []
+    for a in actions:
+        rem = a.get("remove")
+        if rem is not None:
+            p = _decode_path(rem["path"])
+            live.pop(p, None)
+            if removed is not None:
+                removed[(p, dv_unique_id(rem.get("deletionVector")))] = rem
+        elif (add := a.get("add")) is not None:
+            adds.append(add)
+    for add in adds:
+        live[_decode_path(add["path"])] = decode(add)
+
+
+def _apply_actions(acc: _ReplayAccumulator, actions) -> None:
+    """Fold one commit (or one reconciled checkpoint row) into the
+    replay accumulator."""
+    for a in actions:
+        _apply_action(acc, a)
+    fold_commit(acc.adds, actions, acc.removed)
 
 
 def _iter_batch_adds(batch):
@@ -849,10 +912,9 @@ def _fold_checkpoint_batch(batch, acc: _ReplayAccumulator) -> None:
         if arr.null_count == len(arr):
             continue
         for v in arr.drop_null().to_pylist():
-            _apply_action(acc, {col: v})
-    adds, removed = acc.adds, acc.removed
+            _apply_actions(acc, [{col: v}])
+    adds = acc.adds
     for f in _iter_batch_adds(batch):
-        removed.discard(f.path)
         adds[f.path] = f
 
 
@@ -890,7 +952,7 @@ def _read_checkpoint(
     ):
         action = {k: v for k, v in row.items() if v is not None}
         if action:
-            _apply_action(acc, action)
+            _apply_actions(acc, [action])
 
 
 def _read_v2_checkpoint(
@@ -915,7 +977,7 @@ def _read_v2_checkpoint(
         if sc:
             sidecars.append(sc["path"])
         else:
-            _apply_action(acc, action)
+            _apply_actions(acc, [action])
 
     mpath = _join(log_dir, manifest)
     if manifest.endswith(".json"):
@@ -949,7 +1011,7 @@ def _read_v2_checkpoint(
         for row in fs.read_checkpoint_rows(paths, ["add", "remove"]):
             action = {k: v for k, v in row.items() if v is not None}
             if action:
-                _apply_action(acc, action)
+                _apply_actions(acc, [action])
     return paths
 
 
@@ -1093,7 +1155,7 @@ class DeltaLog:
         JSONs in the range. A missing commit is a named error: a gap in
         the log, or a version expired by log retention cleanup."""
         log_files = self._list_log_files()
-        acc = _ReplayAccumulator()
+        acc = _ReplayAccumulator(removed=None if include_files else {})
 
         # Pick the newest checkpoint at or below the requested version.
         cp_version = -1
@@ -1139,10 +1201,10 @@ class DeltaLog:
                     compacted_by_start[s] = (e, f)
 
         def _apply_file(fname: str) -> None:
-            for line in self._fs.read_text(_join(self.log_dir, fname)).splitlines():
-                line = line.strip()
-                if line:
-                    _apply_action(acc, json.loads(line))
+            text = self._fs.read_text(_join(self.log_dir, fname))
+            _apply_actions(
+                acc, [json.loads(l) for l in text.splitlines() if l.strip()]
+            )
 
         replayed = cp_version
         while replayed < version:
@@ -1235,7 +1297,7 @@ class DeltaLog:
             **r.header,
             checkpoint_paths=r.checkpoint_paths,
             overlay_adds=r.adds,
-            dead_paths=set(r.removed) | {f.path for f in r.adds},
+            dead_paths={p for p, _dv in r.removed} | {f.path for f in r.adds},
             overlay_raw_stats=r.raw_stats,
         )
 

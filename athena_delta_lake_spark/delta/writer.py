@@ -55,6 +55,7 @@ from .log import (
     add_action,
     addfile_from_files_row,
     remap_addfile,
+    remove_action,
 )
 from .types import logical_to_physical, struct_to_schema_string
 
@@ -642,14 +643,13 @@ def _rewrite_commute_conflict(
     table_path: str,
     base_version: int,
     committed_version: int,
-    remove_paths: list[str],
-    expected_states: dict | None,
+    removes: list,
     actions_by_version: dict | None = None,
 ) -> bool:
     """The commit_rewrite liveness/fingerprint conflict check evaluated
     INCREMENTALLY: file states change exclusively through add/remove
-    actions, so replaying only the interleaved commits
-    (base_version, committed_version] for actions on the WATCHED paths is
+    actions, so folding only the interleaved commits
+    (base_version, committed_version] on top of the removed files is
     exactly equivalent to comparing against a full current snapshot —
     O(interleaved commits), not O(table). The classic form replayed the
     whole snapshot (8.6 GiB / 187 s at 10^7 adds, tools/meta_scale.py)
@@ -657,71 +657,42 @@ def _rewrite_commute_conflict(
     O(table)-driver-memory path in the commit plane (PERF_TRIAGE_r9's
     known residue).
 
-    Contract (all dml.py callers satisfy it by construction):
-    `remove_paths` are live files of the base_version snapshot and
-    `expected_states` maps them to their base-snapshot fingerprints — so
-    an interleave-untouched path is still live with its expected
-    fingerprint, no lookup needed.
+    Contract (all dml.py callers satisfy it by construction): `removes`
+    are live AddFiles of the base_version snapshot, so a path no
+    interleaved commit touches is still live with its base fingerprint.
 
-    Conflict iff (a) an interleaved commit removed a path this rewrite
-    also removes (its last action is a remove — any remove, including
-    dataChange=false OPTIMIZE moves), or (b) an interleaved commit
-    RE-ADDED a watched path whose expected fingerprint no longer matches
-    (e.g. a concurrent merge-on-read DELETE growing the file's deletion
-    vector). A re-add with an IDENTICAL fingerprint commutes, exactly as
-    the classic comparison concluded.
+    The interleaved commits go through log.fold_commit, the same fold
+    replay uses (removes before adds within a commit). Conflict iff a
+    removed file is no longer live after the fold (an interleaved
+    remove of any kind, including dataChange=false OPTIMIZE moves), or
+    is live with a different fingerprint (e.g. a concurrent
+    merge-on-read DELETE re-adding it with a grown deletion vector). A
+    re-add with an IDENTICAL fingerprint commutes, exactly as the
+    classic comparison concluded.
 
     Raises FileNotFoundError when an interleaved commit JSON is gone
     (concurrent metadata cleanup) — the caller falls back to the classic
     snapshot comparison. `actions_by_version` injects pre-read commit
     actions so commit_rewrite reads each interleaved JSON ONCE for both
     this check and the serializable read-set walk."""
-    from .log import DeltaLog, _decode_path
+    from .log import DeltaLog, fold_commit
 
-    watched = set(remove_paths) | set(expected_states or ())
-    if not watched:
+    if not removes:
         return False
     log = DeltaLog(table_path)
-    dead: set[str] = set()
-    readded: dict[str, dict] = {}
+    live = {f.path: f for f in removes}
     for v in range(base_version + 1, committed_version + 1):
-        acts = (
+        fold_commit(
+            live,
             actions_by_version[v]
             if actions_by_version is not None
-            else log.commit_actions(v)
+            else log.commit_actions(v),
         )
-        for action in acts:
-            add = action.get("add")
-            if add is not None:
-                p = _decode_path(add["path"])
-                if p in watched:
-                    readded[p] = add
-                    dead.discard(p)
-                continue
-            rem = action.get("remove")
-            if rem is not None:
-                p = _decode_path(rem["path"])
-                if p in watched:
-                    dead.add(p)
-                    readded.pop(p, None)
-    if dead.intersection(remove_paths):
-        return True
-    for p, add in readded.items():
-        fp = (expected_states or {}).get(p)
-        if fp is None:
-            continue
-        dv = add.get("deletionVector") or {}
-        now_fp = (
-            p,
-            int(add.get("size", 0)),
-            int(add.get("modificationTime", 0)),
-            dv.get("pathOrInlineDv"),
-            dv.get("offset"),
-            dv.get("cardinality"),
-        )
-        if tuple(fp) != now_fp:
-            return True
-    return False
+    return any(
+        (now := live.get(f.path)) is None
+        or file_fingerprint(now) != file_fingerprint(f)
+        for f in removes
+    )
 
 
 def _serializable_read_conflict(
@@ -740,14 +711,7 @@ def _serializable_read_conflict(
     column mapping, mirroring log replay, before the same prune logic
     that planned the DML's read decides overlap. O(interleaved adds) —
     bounded by what landed during the race window."""
-    from .log import (
-        AddFile,
-        DeltaLog,
-        SnapshotState,
-        _decode_path,
-        addfile_from_action,
-        remap_addfile,
-    )
+    from .log import DeltaLog, SnapshotState, fold_commit, remap_addfile
     from .stats import prune_files
     from .types import physical_to_logical
 
@@ -755,26 +719,30 @@ def _serializable_read_conflict(
     p2l = physical_to_logical(
         now_snap.schema, now_snap.metadata.get("configuration")
     )
-    new_adds: list[AddFile] = []
-    removed_paths: set[str] = set()
+    # fold the interleave's dataChange actions: `added` is what it left
+    # live, `removed` what it took away (a MOR rewrite's remove+re-add of
+    # one path folds to a re-add, not a read-set deletion)
+    added: dict = {}
+    removed: dict = {}
     for v in range(base_version + 1, now_snap.version + 1):
         acts = (
             actions_by_version[v]
             if actions_by_version is not None and v in actions_by_version
             else log.commit_actions(v)
         )
-        for action in acts:
-            add = action.get("add")
-            if add is not None and add.get("dataChange", True):
-                f = addfile_from_action(add)
-                new_adds.append(remap_addfile(f, p2l))
-                continue
-            rem = action.get("remove")
-            if rem is not None and rem.get("dataChange", True):
-                removed_paths.add(_decode_path(rem["path"]))
-    # a MOR rewrite removes+re-adds the same path: the re-add covers it
-    # above; treat only NET removals as read-set deletions
-    removed_paths -= {f.path for f in new_adds}
+        fold_commit(
+            added,
+            [
+                a
+                for a in acts
+                if (a.get("add") or a.get("remove") or {}).get(
+                    "dataChange", True
+                )
+            ],
+            removed,
+        )
+    new_adds = [remap_addfile(f, p2l) for f in added.values()]
+    removed_paths = {p for p, _dv in removed} - set(added)
     if not new_adds and not removed_paths:
         return False
     if not read_predicates:
@@ -830,11 +798,10 @@ def commit_rewrite(
     table_path: str,
     operation: str,
     adds: list[dict],
-    remove_paths: list[str],
+    removes: list,
     data_change: bool = True,
     operation_parameters: dict | None = None,
     extra_actions: list[dict] | None = None,
-    expected_states: dict | None = None,
     base_version: int | None = None,
     require_serial: bool = False,
     isolation: str = "write_serializable",
@@ -843,11 +810,14 @@ def commit_rewrite(
     operation_metrics: dict | None = None,
 ) -> int:
     """Commit a file-rewrite transaction: `remove` the replaced files and
-    `add` their rewrites in ONE atomic version — the copy-on-write commit
-    shape shared by DELETE/UPDATE/MERGE/OPTIMIZE/RESTORE (dml.py).
-    Untouched files are never referenced, so the commit is O(touched
-    files). `extra_actions` (e.g. a reinstated metaData for RESTORE) are
-    written right after commitInfo.
+    `add` their rewrites in ONE atomic version — the commit shape shared
+    by DELETE/UPDATE/MERGE/OPTIMIZE/RESTORE (dml.py). `removes` are the
+    live AddFiles the rewrite retires, as the planning snapshot listed
+    them; each is encoded by log.remove_action, so a merge-on-read
+    re-add's remove carries the deletion vector it retires. Untouched
+    files are never referenced, so the commit is O(touched files).
+    `extra_actions` (e.g. a reinstated metaData for RESTORE) are written
+    right after commitInfo.
 
     `base_version` is the snapshot version the rewrite was PLANNED against.
     Whenever the version about to be committed is not base_version+1 —
@@ -859,13 +829,11 @@ def commit_rewrite(
     (caught by the concurrent-writer fuzz: an OPTIMIZE re-adding rows a
     racing DELETE had just removed).
 
-    `expected_states` maps removed path -> fingerprint (what the caller's
-    snapshot said about the file). The rewrite only commutes if every
-    removed file is still live AND unchanged — a same-path re-add by the
-    winner (e.g. a concurrent merge-on-read DELETE growing the file's
-    deletion vector) is a write-write conflict the plain liveness check
-    would miss, silently dropping the winner's
-    deletions.
+    The rewrite only commutes if every removed file is still live AND
+    has the fingerprint the planning snapshot gave it — a same-path
+    re-add by the winner (e.g. a concurrent merge-on-read DELETE growing
+    the file's deletion vector) is a write-write conflict the plain
+    liveness check would miss, silently dropping the winner's deletions.
 
     `isolation`: the default `write_serializable` admits commuting
     rewrites whose removed files are untouched (delta-spark's default).
@@ -899,22 +867,9 @@ def commit_rewrite(
         }
     actions: list[dict] = [{"commitInfo": commit_info}]
     actions.extend(extra_actions or [])
-    from urllib.parse import quote
-
-    for p in remove_paths:
-        actions.append(
-            {
-                "remove": {
-                    # remove_paths arrive as AddFile.path (URL-decoded
-                    # physical names); the log stores percent-encoded paths
-                    # (replay unquotes, log.py:_decode_path) — without this
-                    # a remove of e.g. `grp=a%3Db/...` would silently miss
-                    "path": quote(p, safe="/="),
-                    "deletionTimestamp": now,
-                    "dataChange": data_change,
-                }
-            }
-        )
+    actions.extend(
+        {"remove": remove_action(f, data_change, now)} for f in removes
+    )
     version = _next_version(table_path)
     snap_now = DeltaLog(table_path).header()
     _check_write_protocol(snap_now.protocol, table_path)
@@ -932,7 +887,7 @@ def commit_rewrite(
             a = {"add": {**a["add"], "dataChange": False}}
         actions.append(a)
     log_dir = os.path.join(table_path, "_delta_log")
-    if data_change and remove_paths:
+    if data_change and removes:
         _check_append_only(table_config, operation)
     for _attempt in range(_MAX_COMMIT_RETRIES + 1):
         if (
@@ -954,9 +909,7 @@ def commit_rewrite(
             # lost race below): the rewrite is still valid iff every file
             # it removes is STILL live and byte/DV-identical (no
             # write-write conflict on the same files) — then it commutes.
-            # remove_paths come from AddFile.path (already URL-decoded),
-            # matching _decode_path's form on the raw actions. Evaluated
-            # over only the interleaved commits (O(interleaved), never a
+            # Evaluated over only the interleaved commits (O(interleaved), never a
             # full snapshot replay); a concurrently-cleaned interleaved
             # commit JSON falls back to the classic comparison. A commit
             # landing between _next_version and this scan is covered by
@@ -964,11 +917,9 @@ def commit_rewrite(
             # read the interleaved commits ONCE for both the commute check
             # and (under serializable) the read-set walk — and not at all
             # when neither needs them (an insert-only MERGE passes no
-            # remove_paths: its raced retry must not pay O(interleave)
+            # removes: its raced retry must not pay O(interleave)
             # commit reads for a check that is vacuously clean)
-            needs_actions = bool(
-                remove_paths or expected_states or isolation == "serializable"
-            )
+            needs_actions = bool(removes or isolation == "serializable")
             interleaved: dict | None = None
             if needs_actions:
                 try:
@@ -988,21 +939,18 @@ def commit_rewrite(
                     table_path,
                     base_version,
                     version - 1,
-                    remove_paths,
-                    expected_states,
+                    removes,
                     actions_by_version=interleaved,
                 )
             else:
                 now_files = {
                     f.path: f for f in DeltaLog(table_path).snapshot().files
                 }
-                conflict = any(p not in now_files for p in remove_paths)
-                if not conflict and expected_states:
-                    conflict = any(
-                        file_fingerprint(now_files[p]) != fp
-                        for p, fp in expected_states.items()
-                        if p in now_files
-                    )
+                conflict = any(
+                    (now := now_files.get(f.path)) is None
+                    or file_fingerprint(now) != file_fingerprint(f)
+                    for f in removes
+                )
             if conflict:
                 raise ConcurrentWriteError(
                     f"{operation} conflicts with a concurrent commit that "
@@ -1831,8 +1779,6 @@ def write_delta(
             }
         )
     if mode == "overwrite" and prior is not None:
-        from urllib.parse import quote
-
         # replaceWhere removes ONLY the predicate-scoped files (plus their
         # survivor rewrites added below); a plain overwrite removes all —
         # streamed at commit time past the light threshold (prior.files is
@@ -1849,17 +1795,9 @@ def write_delta(
             and light_overwrite.files_df(df.sparkSession).limit(1).count()
         ):
             _check_append_only(effective_config, "overwrite")
-        for f in to_remove:
-            actions.append(
-                {
-                    "remove": {
-                        # f.path is URL-decoded; the log stores encoded paths
-                        "path": quote(f.path, safe="/="),
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions.extend(
+            {"remove": remove_action(f, True, now)} for f in to_remove
+        )
         adds = rw_survivor_adds + adds
         if rw_survivor_adds and cdf_enabled(effective_config):
             # boundary-file rewrite under replaceWhere: add/remove
@@ -3195,9 +3133,9 @@ def commit_streamed_removes(
     map: the commit must land exactly at expected_version (default
     light.version + 1) — any interleaved commit raises
     ConcurrentWriteError for a re-plan. A full-table rewrite conflicts
-    with any concurrent data change anyway, and a 10^7-entry
-    expected_states map is precisely the driver allocation this path
-    exists to avoid. (Classic sub-threshold paths keep the per-file
+    with any concurrent data change anyway, and 10^7 removed AddFiles
+    held for the per-file check are precisely the driver allocation this
+    path exists to avoid. (Classic sub-threshold paths keep the per-file
     commute check and still let blind appends slide past a TRUNCATE —
     past the threshold a raced full rewrite re-plans instead.)"""
     now = int(time.time() * 1000)
@@ -3215,30 +3153,23 @@ def commit_streamed_removes(
         import json as _j
 
         import pandas as _pd
-        from urllib.parse import quote as _q
 
         for pdf in batches:
             yield _pd.DataFrame(
                 {
                     "line": [
                         _j.dumps(
-                            {
-                                "remove": {
-                                    # files_df paths are URL-decoded; the
-                                    # log stores percent-encoded paths
-                                    "path": _q(p, safe="/="),
-                                    "deletionTimestamp": now,
-                                    "dataChange": data_change,
-                                }
-                            },
+                            {"remove": remove_action(f, data_change, now)},
                             separators=(",", ":"),
                         )
-                        for p in pdf["path"]
+                        for f in _batch_files(pdf, None)
                     ]
                 }
             )
 
-    lines_df = light.files_df(spark).mapInPandas(gen, schema="line string")
+    lines_df = light.files_df(spark, full=True).mapInPandas(
+        gen, schema="line string"
+    )
     return _stream_commit(
         table_path, operation, header_actions, lines_df,
         expected_version, table_config,
@@ -4367,8 +4298,12 @@ def compact_log(table_path: str, start: int, end: int) -> str:
     per appId, and live domainMetadata. Replay (log.py) prefers the
     compacted file over the per-commit JSONs whenever the range fits, and
     keeps working after third-party maintenance deletes those commits.
-    commitInfo/cdc actions are dropped (they carry no snapshot state)."""
-    from .log import DeltaLog, _decode_path
+    commitInfo/cdc actions are dropped (they carry no snapshot state).
+    Each commit goes through log.fold_commit; a tombstone survives unless
+    the live add has its exact (path, DV uniqueId), so the remove(p, dv1)
+    of a merge-on-read re-add add(p, dv2) is kept for readers that key
+    files by that pair."""
+    from .log import DeltaLog, dv_unique_id, fold_commit
 
     if not 0 <= start <= end:
         raise ValueError(f"bad compaction range [{start}, {end}]")
@@ -4379,22 +4314,16 @@ def compact_log(table_path: str, start: int, end: int) -> str:
             f"{log.latest_version()}"
         )
     adds: dict[str, dict] = {}
-    removes: dict[str, dict] = {}
+    removes: dict[tuple, dict] = {}
     metadata = None
     protocol = None
     txns: dict[str, dict] = {}
     domains: dict[str, dict] = {}
     for v in range(start, end + 1):
-        for a in log.commit_actions(v):
-            if "add" in a:
-                p = _decode_path(a["add"]["path"])
-                adds[p] = a
-                removes.pop(p, None)
-            elif "remove" in a:
-                p = _decode_path(a["remove"]["path"])
-                adds.pop(p, None)
-                removes[p] = a
-            elif "metaData" in a:
+        acts = log.commit_actions(v)
+        fold_commit(adds, acts, removes, decode=lambda add: add)
+        for a in acts:
+            if "metaData" in a:
                 metadata = a
             elif "protocol" in a:
                 protocol = a
@@ -4412,8 +4341,13 @@ def compact_log(table_path: str, start: int, end: int) -> str:
             + ([metadata] if metadata else [])
             + list(txns.values())
             + list(domains.values())
-            + list(removes.values())
-            + list(adds.values())
+            + [
+                {"remove": r}
+                for (p, dv), r in removes.items()
+                if p not in adds
+                or dv_unique_id(adds[p].get("deletionVector")) != dv
+            ]
+            + [{"add": a} for a in adds.values()]
         )
     )
     # write-to-temp + rename so concurrent replayers never observe a torn

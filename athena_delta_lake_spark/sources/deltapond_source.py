@@ -67,7 +67,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..delta.log import DeltaLog
+from ..delta.log import DeltaLog, remove_action
 from ..delta.stats import make_file_filter
 from ..delta.types import (
     cast_partition_value,
@@ -838,10 +838,11 @@ class DeltaPondStreamReader(DataSourceStreamReader):
         return parts
 
     def _cdf_partitions(self, log, lo: int, hi: int):
-        """Change-feed partitions for commits [lo, hi]: adds (minus
-        same-path rewrites) emit inserts, removes emit deletes read from
-        the previous snapshot's state, and same-path remove+add pairs with
-        a changed deletion vector emit exactly the newly-DV'd rows.
+        """Change-feed partitions for commits [lo, hi]: one per file of
+        each commit's cdf._ChangeSet, the change set table_changes reads
+        too — cdc files, inserted and deleted files, and for same-path
+        pairs with a changed deletion vector exactly the newly-DV'd (or
+        un-deleted) rows.
 
         Driver-light (round-10 ask #1, streaming side): the previous shape
         replayed a CLASSIC snapshot per commit (`log.snapshot(v - 1)`) —
@@ -852,129 +853,56 @@ class DeltaPondStreamReader(DataSourceStreamReader):
         active session is available here because partitions() runs in the
         driver process), then each commit's own actions advance the
         watched-path state."""
-        from ..delta.cdf import _RangeTracker, _rekey_entry
-        from ..delta.log import _decode_path
+        from ..delta.cdf import _RangeTracker
 
-        tracker = _RangeTracker(log, lo, hi)
+        def _part(f, v, **kw):
+            return DeltaScanPartition(
+                file_path=os.path.join(self._path, f.path),
+                partition_values=dict(f.partition_values),
+                table_path=self._path,
+                commit_version=v,
+                **kw,
+            )
+
         parts = []
-        for v in range(lo, hi + 1):
-            actions = tracker.actions[v]
-            cdc_actions = [a["cdc"] for a in actions if "cdc" in a]
-            adds = {
-                _decode_path(a["add"]["path"]): a["add"]
-                for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            }
-            removes = {
-                _decode_path(a["remove"]["path"])
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            }
-            # cdc commits AT the base are derivable — only their header is
-            # needed and the seed provides it (see cdf.table_changes)
-            if 0 < v <= tracker.base_version and (
-                (not cdc_actions and (adds or removes))
-                or (cdc_actions and v < tracker.base_version)
-            ):
-                raise ValueError(
-                    f"version {v - 1} of {self._path} is no longer "
-                    "replayable: its commit JSONs predate the earliest "
-                    "checkpoint (expired by log retention cleanup)"
-                )
-            pre_header = tracker.header.freeze()
-            pre_entries = {
-                p: tracker.state[p]
-                for p in (set(adds) | removes)
-                if p in tracker.state
-            }
-            tracker.fold(v)
-            if cdc_actions:
-                # spec: a commit WITH cdc actions describes ALL its changes
-                # through the change data files — add/remove are ignored
-                # (the fold above still advanced the table state)
-                for a in cdc_actions:
-                    pv = a.get("partitionValues") or {}
-                    parts.append(
-                        DeltaScanPartition(
-                            file_path=os.path.join(
-                                self._path, _decode_path(a["path"])
-                            ),
-                            partition_values=dict(pv),
-                            table_path=self._path,
-                            cdc_file=True,
-                            commit_version=v,
-                        )
-                    )
-                continue
-            # pre-commit live entries, partition keys remapped to the
-            # pre-era LOGICAL names (tracker state is log-form/physical)
-            p2l_pre = pre_header.p2l()
-            prev_by = {
-                p: _rekey_entry(f, p2l_pre) for p, f in pre_entries.items()
-            }
-            # same-path change (remove+re-add, or a bare re-add of an
-            # already-live path — RESTORE dropping a DV): diff the DVs,
-            # never re-emit the whole file
-            common = set(adds) & (removes | set(prev_by))
-            snap_part_cols = tracker.header.partition_columns
-            for path, a in adds.items():
-                pv = a.get("partitionValues") or {}
-                if path in common:
-                    pf = prev_by.get(path)
-                    parts.append(
-                        DeltaScanPartition(
-                            file_path=os.path.join(self._path, path),
-                            partition_values=dict(pv),
-                            dv=a.get("deletionVector") or None,
-                            dv_old=pf.deletion_vector if pf else None,
-                            dv_diff=True,
-                            table_path=self._path,
-                            change_type="delete",
-                            commit_version=v,
-                        )
-                    )
-                    # a SHRINKING deletion vector (RESTORE rolling back a
-                    # MOR delete) resurrects rows: old minus new positions
-                    # are INSERTS — same diff read with the DVs swapped
-                    parts.append(
-                        DeltaScanPartition(
-                            file_path=os.path.join(self._path, path),
-                            partition_values=dict(pv),
-                            dv=pf.deletion_vector if pf else None,
-                            dv_old=a.get("deletionVector") or None,
-                            dv_diff=True,
-                            table_path=self._path,
-                            change_type="insert",
-                            commit_version=v,
-                        )
-                    )
-                else:
-                    parts.append(
-                        DeltaScanPartition(
-                            file_path=os.path.join(self._path, path),
-                            partition_values=dict(pv),
-                            dv=a.get("deletionVector") or None,
-                            table_path=self._path,
-                            change_type="insert",
-                            commit_version=v,
-                        )
-                    )
-            for path in removes - common:
-                pf = prev_by.get(path)
-                if pf is None:
-                    continue  # removed file unknown to prior snapshot
+        for cs in _RangeTracker(log, lo, hi).change_sets():
+            # spec: a commit WITH cdc actions describes ALL its changes
+            # through the change data files (its other lists are empty)
+            v = cs.version
+            parts += [_part(f, v, cdc_file=True) for f in cs.cdc]
+            for pf, nf in cs.dv_pairs:
+                # newly DV'd rows are deletes; a SHRINKING deletion vector
+                # (RESTORE rolling back a MOR delete) resurrects rows:
+                # old minus new positions are INSERTS — same diff read
+                # with the DVs swapped
                 parts.append(
-                    DeltaScanPartition(
-                        file_path=os.path.join(self._path, path),
-                        partition_values={
-                            c: pf.partition_values.get(c) for c in snap_part_cols
-                        },
-                        dv=pf.deletion_vector,
-                        table_path=self._path,
+                    _part(
+                        nf,
+                        v,
+                        dv=nf.deletion_vector,
+                        dv_old=pf.deletion_vector,
+                        dv_diff=True,
                         change_type="delete",
-                        commit_version=v,
                     )
                 )
+                parts.append(
+                    _part(
+                        nf,
+                        v,
+                        dv=pf.deletion_vector,
+                        dv_old=nf.deletion_vector,
+                        dv_diff=True,
+                        change_type="insert",
+                    )
+                )
+            parts += [
+                _part(f, v, dv=f.deletion_vector, change_type="insert")
+                for f in cs.inserted
+            ]
+            parts += [
+                _part(f, v, dv=f.deletion_vector, change_type="delete")
+                for f in cs.deleted
+            ]
         return parts
 
     def read(self, partition: DeltaScanPartition):
@@ -1208,18 +1136,9 @@ def _commit_adds(
             }
         )
     if overwrite and prior is not None:
-        from urllib.parse import quote
-
-        for f in prior.files:
-            actions.append(
-                {
-                    "remove": {
-                        "path": quote(f.path, safe="/="),
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions.extend(
+            {"remove": remove_action(f, True, now)} for f in prior.files
+        )
     if prior is not None:
         # row tracking: DSv2 writes to an enableRowTracking table must
         # allocate id ranges like every other writer, or the appended rows

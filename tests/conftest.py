@@ -97,3 +97,54 @@ def dv_source_table(spark, path: str, mapped: bool = False) -> str:
     write_checkpoint(path)
     DeltaLog.clear_cache()
     return path
+
+
+def _dv_id(dv: dict | None) -> str | None:
+    if not dv:
+        return None
+    uid = f"{dv['storageType']}{dv['pathOrInlineDv']}"
+    return uid if dv.get("offset") is None else f"{uid}@{dv['offset']}"
+
+
+def protocol_live_files(path: str) -> dict:
+    """Reference replay keyed the way the Delta protocol keys files: fold
+    every commit JSON of `path` by (path, dvId), dvId = storageType +
+    pathOrInlineDv + '@offset'. Reads the JSON commits only and shares no
+    code with DeltaLog, so agreement between the two is evidence.
+    Returns {(path, dvId): add body} of the live entries."""
+    import json
+    import re
+    from urllib.parse import unquote
+
+    log_dir = os.path.join(path, "_delta_log")
+    live: dict = {}
+    for name in sorted(os.listdir(log_dir)):
+        if not re.fullmatch(r"\d{20}\.json", name):
+            continue
+        with open(os.path.join(log_dir, name)) as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        # an entry is added and removed at most once per commit, so the
+        # keyed fold is the same in any action order
+        for a in actions:
+            if "remove" in a:
+                r = a["remove"]
+                live.pop((unquote(r["path"]), _dv_id(r.get("deletionVector"))), None)
+        for a in actions:
+            if "add" in a:
+                ad = a["add"]
+                live[(unquote(ad["path"]), _dv_id(ad.get("deletionVector")))] = ad
+    return live
+
+
+def assert_protocol_replay(path: str) -> None:
+    """The protocol-keyed reference replay lists every live path once and
+    agrees with DeltaLog.snapshot() on each file's deletion vector."""
+    from athena_delta_lake_spark.delta.log import DeltaLog
+
+    ref = sorted(protocol_live_files(path))
+    paths = [p for p, _dv in ref]
+    assert len(paths) == len(set(paths)), f"a path is live twice: {ref}"
+    DeltaLog.clear_cache()
+    snap = DeltaLog(path).snapshot()
+    got = sorted((f.path, _dv_id(f.deletion_vector)) for f in snap.files)
+    assert ref == got

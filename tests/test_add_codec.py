@@ -153,3 +153,18 @@ def test_only_remap_addfile_renames_stats_keys():
         if 'get("minValues")' in p.read_text()
     ]
     assert hits == [os.path.join("delta", "log.py")], hits
+
+
+def test_only_remove_action_encodes_removes():
+    """Source guard: log.remove_action is the one remove encoder, and the
+    CDF change set renames partition keys through remap_addfile alone."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "athena_delta_lake_spark"
+    texts = {str(p.relative_to(pkg)): p.read_text() for p in pkg.rglob("*.py")}
+    hits = [
+        p
+        for p, s in texts.items()
+        if '"remove": {' in s and p != os.path.join("delta", "log.py")
+    ]
+    assert hits == [], hits
+    assert not [p for p, s in texts.items() if "_rekey_entry" in s]

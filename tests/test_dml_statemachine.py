@@ -20,6 +20,8 @@ import pytest
 # the default fast tier (see pytest.ini); the full tier runs them all
 pytestmark = pytest.mark.slow
 
+from conftest import assert_protocol_replay
+
 from athena_delta_lake_spark import DeltaTable, write_delta
 from athena_delta_lake_spark.delta.log import DeltaLog
 from athena_delta_lake_spark.delta.writer import (
@@ -429,6 +431,8 @@ def test_random_dml_walk_matches_model(spark, tmp_path, seed, plane):
         got = _table_state(spark, path)
         want = _model_state(model)
         assert got == want, f"divergence after step {step} op {op} (seed {seed})"
+        # protocol-keyed replay: no path live twice under two DVs
+        assert_protocol_replay(path)
         # change-feed apply-diff invariant: state(v-1) + changes(v..now)
         # == state(now), as a multiset — holds for BOTH sources of truth
         # (cdc files on even seeds, add/remove derivation on odd)

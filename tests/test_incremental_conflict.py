@@ -27,7 +27,6 @@ from athena_delta_lake_spark.delta.log import DeltaLog
 from athena_delta_lake_spark.delta.writer import (
     ConcurrentWriteError,
     commit_rewrite,
-    file_fingerprint,
     write_checkpoint,
 )
 
@@ -69,7 +68,7 @@ def _poison_snapshot(monkeypatch):
 def _planned_remove(path: str):
     snap = DeltaLog(path).snapshot()
     f = sorted(snap.files, key=lambda x: x.path)[0]
-    return snap.version, f, {f.path: file_fingerprint(f)}
+    return snap.version, f
 
 
 def _raw_add(path: str, file_path: str) -> dict:
@@ -89,7 +88,7 @@ def test_untouched_interleave_commutes_without_classic_replay(
 ):
     path = str(tmp_path / "t")
     _mk(spark, path, monkeypatch)
-    base, f, expected = _planned_remove(path)
+    base, f = _planned_remove(path)
     # interleaved commit that does NOT touch the planned file
     write_delta(
         spark.createDataFrame([(99, 9.9)], "id long, v double"),
@@ -101,8 +100,7 @@ def test_untouched_interleave_commutes_without_classic_replay(
         path,
         "DELETE",
         adds=[],
-        remove_paths=[f.path],
-        expected_states=expected,
+        removes=[f],
         base_version=base,
     )
     monkeypatch.undo()
@@ -116,14 +114,13 @@ def test_interleaved_remove_conflicts_without_classic_replay(
 ):
     path = str(tmp_path / "t")
     _mk(spark, path, monkeypatch)
-    base, f, expected = _planned_remove(path)
+    base, f = _planned_remove(path)
     # the winner removes the same file first
     commit_rewrite(
         path,
         "DELETE",
         adds=[],
-        remove_paths=[f.path],
-        expected_states=expected,
+        removes=[f],
         base_version=base,
     )
     _poison_snapshot(monkeypatch)
@@ -132,8 +129,7 @@ def test_interleaved_remove_conflicts_without_classic_replay(
             path,
             "DELETE",
             adds=[],
-            remove_paths=[f.path],
-            expected_states=expected,
+            removes=[f],
             base_version=base,
         )
 
@@ -143,15 +139,14 @@ def test_readd_with_changed_fingerprint_conflicts(spark, tmp_path, monkeypatch):
     deletion vector) changes the fingerprint: write-write conflict."""
     path = str(tmp_path / "t")
     _mk(spark, path, monkeypatch)
-    base, f, expected = _planned_remove(path)
+    base, f = _planned_remove(path)
     mutated = _raw_add(path, f.path)
     mutated = {"add": {**mutated["add"], "size": mutated["add"]["size"] + 1}}
     commit_rewrite(
         path,
         "DELETE",
         adds=[mutated],
-        remove_paths=[f.path],
-        expected_states=expected,
+        removes=[f],
         base_version=base,
     )
     _poison_snapshot(monkeypatch)
@@ -160,8 +155,7 @@ def test_readd_with_changed_fingerprint_conflicts(spark, tmp_path, monkeypatch):
             path,
             "DELETE",
             adds=[],
-            remove_paths=[f.path],
-            expected_states=expected,
+            removes=[f],
             base_version=base,
         )
 
@@ -171,14 +165,13 @@ def test_identical_readd_commutes(spark, tmp_path, monkeypatch):
     file live and unchanged, so the planned rewrite still commutes."""
     path = str(tmp_path / "t")
     _mk(spark, path, monkeypatch)
-    base, f, expected = _planned_remove(path)
+    base, f = _planned_remove(path)
     verbatim = _raw_add(path, f.path)
     commit_rewrite(
         path,
         "RESTORE",
         adds=[verbatim],
-        remove_paths=[f.path],
-        expected_states=expected,
+        removes=[f],
         base_version=base,
     )
     _poison_snapshot(monkeypatch)
@@ -186,8 +179,7 @@ def test_identical_readd_commutes(spark, tmp_path, monkeypatch):
         path,
         "DELETE",
         adds=[],
-        remove_paths=[f.path],
-        expected_states=expected,
+        removes=[f],
         base_version=base,
     )
     monkeypatch.undo()
@@ -201,7 +193,7 @@ def test_cleaned_interleave_falls_back_to_classic(spark, tmp_path):
     comparison (replay from the checkpoint) and reach the same answer."""
     path = str(tmp_path / "t")
     _mk(spark, path)
-    base, f, expected = _planned_remove(path)
+    base, f = _planned_remove(path)
     write_delta(
         spark.createDataFrame([(99, 9.9)], "id long, v double"),
         path,
@@ -218,8 +210,7 @@ def test_cleaned_interleave_falls_back_to_classic(spark, tmp_path):
         path,
         "DELETE",
         adds=[],
-        remove_paths=[f.path],
-        expected_states=expected,
+        removes=[f],
         base_version=base,
     )
     assert v == base + 2
@@ -261,15 +252,13 @@ def test_serializable_readset_probe_is_light_past_threshold(
         raise AssertionError(f"no file with min id {lo}")
 
     target = _file_with_min(20)  # the file our rewrite removes
-    expected = {target.path: file_fingerprint(target)}
     # interleaved REMOVE-only commit (partition fast-path DELETE shape):
     # drops the whole id 0..9 file without adding anything
     commit_rewrite(
         path,
         "DELETE",
         adds=[],
-        remove_paths=[_file_with_min(0).path],
-        expected_states=None,
+        removes=[_file_with_min(0)],
         base_version=base,
     )
     DeltaLog.clear_cache()
@@ -281,8 +270,7 @@ def test_serializable_readset_probe_is_light_past_threshold(
             path,
             "DELETE",
             adds=[],
-            remove_paths=[target.path],
-            expected_states=expected,
+            removes=[target],
             base_version=base,
             isolation="serializable",
             read_predicates=[("id", "<", 5)],
@@ -292,8 +280,7 @@ def test_serializable_readset_probe_is_light_past_threshold(
         path,
         "DELETE",
         adds=[],
-        remove_paths=[target.path],
-        expected_states=expected,
+        removes=[target],
         base_version=base,
         isolation="serializable",
         read_predicates=[("id", ">=", 25)],
@@ -309,7 +296,7 @@ def test_serializable_cleaned_interleave_refuses(spark, tmp_path):
     with FileNotFoundError."""
     path = str(tmp_path / "t")
     _mk(spark, path)
-    base, f, expected = _planned_remove(path)
+    base, f = _planned_remove(path)
     write_delta(
         spark.createDataFrame([(99, 9.9)], "id long, v double"),
         path,
@@ -325,8 +312,7 @@ def test_serializable_cleaned_interleave_refuses(spark, tmp_path):
             path,
             "DELETE",
             adds=[],
-            remove_paths=[f.path],
-            expected_states=expected,
+            removes=[f],
             base_version=base,
             isolation="serializable",
             read_predicates=[("id", "<", 5)],

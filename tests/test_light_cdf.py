@@ -269,7 +269,7 @@ def test_table_changes_light_mapped_partition_rename(
 ):
     """Column-mapped PARTITIONED table with the partition column renamed
     mid-range: the tracker stores entries in the log's PHYSICAL key form
-    and remaps per era at read time (_rekey_entry) — a file added before
+    and remaps per era at read time (remap_addfile) — a file added before
     the rename and DV-diffed/removed after it must inject its partition
     value under the era's logical name, exactly as the classic
     per-version snapshot remap did."""

@@ -768,7 +768,7 @@ def conflict_main(root: str, n_files: int, out: dict, check_classic: bool) -> in
     no Spark session at all. Fresh process, peak RSS < 2 GiB bar.
 
     Leaves the prepared table unchanged (the test commits are removed)."""
-    from athena_delta_lake_spark.delta.log import DeltaLog
+    from athena_delta_lake_spark.delta.log import DeltaLog, addfile_from_action
     from athena_delta_lake_spark.delta.writer import (
         ConcurrentWriteError,
         commit_rewrite,
@@ -792,13 +792,15 @@ def conflict_main(root: str, n_files: int, out: dict, check_classic: bool) -> in
     # two live files straight out of the newest commit's adds — no
     # snapshot, no listing beyond one JSON read
     tail_adds = [
-        a["add"]["path"] for a in log.commit_actions(base) if "add" in a
+        addfile_from_action(a["add"])
+        for a in log.commit_actions(base)
+        if "add" in a
     ]
     assert len(tail_adds) >= 2, "prepared tail commit too small"
     victim, bystander = tail_adds[0], tail_adds[1]
 
     # the interleaved commit: some other writer drops the bystander
-    commit_rewrite(path, "DELETE", adds=[], remove_paths=[bystander])
+    commit_rewrite(path, "DELETE", adds=[], removes=[bystander])
 
     # raced COMMUTING rewrite: planned at `base`, committing at base+2
     t0 = time.time()
@@ -806,7 +808,7 @@ def conflict_main(root: str, n_files: int, out: dict, check_classic: bool) -> in
         path,
         "DELETE",
         adds=[],
-        remove_paths=[victim],
+        removes=[victim],
         base_version=base,
     )
     out["raced_commute_s"] = round(time.time() - t0, 3)
@@ -819,7 +821,7 @@ def conflict_main(root: str, n_files: int, out: dict, check_classic: bool) -> in
             path,
             "DELETE",
             adds=[],
-            remove_paths=[victim],
+            removes=[victim],
             base_version=base,
         )
         raise AssertionError("expected ConcurrentWriteError")
@@ -838,8 +840,8 @@ def conflict_main(root: str, n_files: int, out: dict, check_classic: bool) -> in
         t0 = time.time()
         now_files = {f.path: f for f in DeltaLog(path).snapshot().files}
         out["classic_replay_s"] = round(time.time() - t0, 2)
-        assert victim not in now_files, "classic disagrees: victim live"
-        assert bystander not in now_files
+        assert victim.path not in now_files, "classic disagrees: victim live"
+        assert bystander.path not in now_files
         out["classic_equality"] = "identical"
         out["rss_after_classic_mib"] = round(rss_mib(), 1)
 
@@ -1277,7 +1279,7 @@ def restore_main(root: str, n_files: int, out: dict) -> int:
     (test commits + the dummy data file removed)."""
     from athena_delta_lake_spark import get_spark
     from athena_delta_lake_spark.delta.dml import restore_table
-    from athena_delta_lake_spark.delta.log import DeltaLog
+    from athena_delta_lake_spark.delta.log import DeltaLog, addfile_from_action
     from athena_delta_lake_spark.delta.writer import commit_rewrite
 
     path = os.path.join(root, "meta_scale_tbl")
@@ -1295,14 +1297,16 @@ def restore_main(root: str, n_files: int, out: dict) -> int:
     out["light_engaged"] = bool(log.light_planning_engaged())
     base = log.latest_version()
     victim = next(
-        a["add"]["path"] for a in log.commit_actions(base) if "add" in a
+        addfile_from_action(a["add"])
+        for a in log.commit_actions(base)
+        if "add" in a
     )
     # the re-add path must exist on disk (restore's vacuumed-file check)
-    victim_abs = os.path.join(path, victim)
+    victim_abs = os.path.join(path, victim.path)
     os.makedirs(os.path.dirname(victim_abs), exist_ok=True)
     with open(victim_abs, "wb") as fh:
         fh.write(b"\x00")
-    commit_rewrite(path, "DELETE", adds=[], remove_paths=[victim])
+    commit_rewrite(path, "DELETE", adds=[], removes=[victim])
 
     spark = get_spark(
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
